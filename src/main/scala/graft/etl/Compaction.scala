@@ -19,30 +19,41 @@ import org.apache.spark.sql.SparkSession
   */
 object Compaction {
 
-  /** Returns (fileCountBefore, fileCountChosen). The listing is
-    * RECURSIVE, so partitioned layouts (files nested under
-    * `key=value/` directories) size correctly; note the rewrite
-    * itself is flat — re-partitioning the output is the caller's
-    * layout decision (`df.write.partitionBy`), not compaction's.
+  /** (data files under `inDir`, output file count) for a rewrite into
+    * ~targetBytes files: ceil(bytes / targetBytes), capped at the input's
+    * data-file count — compaction must never raise the file count. The
+    * listing is RECURSIVE, so partitioned layouts (files nested under
+    * `key=value/` directories) size correctly, and it skips `_`- and
+    * `.`-prefixed names (commit markers, Hadoop `.crc` sidecars), which
+    * are not data.
     */
-  def compact(spark: SparkSession, inDir: String, outDir: String,
+  def targetFiles(spark: SparkSession, inDir: String,
       targetBytes: Long): (Int, Int) = {
     require(targetBytes > 0, s"targetBytes must be positive: $targetBytes")
-    val conf = spark.sparkContext.hadoopConfiguration
     val in = new Path(inDir)
-    val fs = in.getFileSystem(conf)
+    val fs = in.getFileSystem(spark.sparkContext.hadoopConfiguration)
     def walk(p: Path): Seq[org.apache.hadoop.fs.FileStatus] =
       fs.listStatus(p).toSeq.flatMap { st =>
-        if (st.isDirectory) walk(st.getPath)
-        else if (st.getPath.getName.startsWith("_")) Nil
+        val name = st.getPath.getName
+        if (name.startsWith("_") || name.startsWith(".")) Nil
+        else if (st.isDirectory) walk(st.getPath)
         else Seq(st)
       }
     val files = walk(in)
-    val totalBytes = files.map(_.getLen).sum
-    val n = math.max(1, math.ceil(totalBytes.toDouble / targetBytes).toInt)
+    val bySize = math.ceil(files.map(_.getLen).sum.toDouble / targetBytes)
+    (files.length, math.max(1, math.min(files.length.toDouble, bySize).toInt))
+  }
+
+  /** Returns (fileCountBefore, fileCountChosen). The rewrite itself is
+    * flat — re-partitioning the output is the caller's layout decision
+    * (`df.write.partitionBy`), not compaction's.
+    */
+  def compact(spark: SparkSession, inDir: String, outDir: String,
+      targetBytes: Long): (Int, Int) = {
+    val (before, n) = targetFiles(spark, inDir, targetBytes)
     spark.read.parquet(inDir)
       .repartition(n)
       .write.mode("overwrite").parquet(outDir)
-    (files.length, n)
+    (before, n)
   }
 }

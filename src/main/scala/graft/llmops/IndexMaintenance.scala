@@ -35,11 +35,9 @@ import graft.ops.SessionScratch
   *    readers keep a consistent view (IndexMaintenanceSpec asserts the
   *    base file set is byte-identical after maintenance).
   *
-  * IvfIndex deliberately does NOT retrain on append: new vectors are
-  * assigned under the RECORDED centroids (the production IVF contract —
-  * FAISS's `add` after `train`). Cell balance degrades as the
-  * distribution drifts; the monitoring operator for that is q171
-  * (embedding drift), and the remediation is an explicit rebuild.
+  * The per-store lifecycle (build / append / delete / compact / vacuum /
+  * fsck / republish) is [[MaintainedStore]]'s; this object holds the
+  * sidecar, manifest, tombstone and provenance primitives it composes.
   */
 object IndexMaintenance {
 
@@ -99,27 +97,6 @@ object IndexMaintenance {
     }
   }
 
-  /** Verify a recorded config matches what this build of the code would
-    * produce; descriptive failure naming the index and the remediation.
-    */
-  private[llmops] def requireConfig(s: SparkSession, dir: String,
-      name: String, expected: String, what: String): Unit =
-    readSidecar(s, dir, name) match {
-      case None =>
-        throw new IllegalStateException(
-          s"$what at $dir has no $name sidecar — the index was not " +
-            "created by build() or its initial ingest did not complete. " +
-            "Maintenance cannot proceed (rows produced under an " +
-            "unknown configuration are incomparable); rebuild the " +
-            "index from scratch.")
-      case Some(found) if found.trim != expected =>
-        throw new IllegalStateException(
-          s"$what at $dir was built under config [${found.trim}] but " +
-            s"this code produces [$expected]. Appending would mix " +
-            "incomparable rows in one index; rebuild the index under " +
-            "the current config.")
-      case _ => ()
-    }
 
   // ---- shared read-only stores (_shared_readonly marker) ------------------
   //
@@ -175,23 +152,69 @@ object IndexMaintenance {
   //
   // The generation token exists for compaction: rewriting many small
   // appended files into few cannot be atomic inside one directory, so
-  // compact() writes generation N+1 as a fresh directory and the
+  // compaction writes generation N+1 as a fresh directory and the
   // manifest publish IS the atomic swap; the superseded generation is
   // deleted best-effort afterwards (a crash between the two leaves
   // only unreferenced garbage, never a half-swapped store).
 
+  private[llmops] def fsOf(s: SparkSession,
+      path: String): org.apache.hadoop.fs.FileSystem =
+    new org.apache.hadoop.fs.Path(path)
+      .getFileSystem(s.sparkContext.hadoopConfiguration)
+
+  /** Best-effort recursive delete (a superseded generation). */
+  private[llmops] def deleteDir(s: SparkSession, dir: String): Unit =
+    fsOf(s, dir).delete(new org.apache.hadoop.fs.Path(dir), true)
+
+  /** Delete `p`, VERIFIED: a silently-failed delete must not pass. */
+  private def requireDeleted(fs: org.apache.hadoop.fs.FileSystem,
+      p: org.apache.hadoop.fs.Path, recursive: Boolean, what: String): Unit =
+    require(fs.delete(p, recursive) || !fs.exists(p), s"$what $p")
+
   /** (name, length) of every data file directly under `dir`. */
   private[llmops] def listDataFiles(s: SparkSession, dir: String)
       : Set[(String, Long)] = {
-    val conf = s.sparkContext.hadoopConfiguration
     val p = new org.apache.hadoop.fs.Path(dir)
-    val fs = p.getFileSystem(conf)
+    val fs = fsOf(s, dir)
     if (!fs.exists(p)) Set.empty
     else fs.listStatus(p).toSeq
       .filter(st => st.isFile && !st.getPath.getName.startsWith("_") &&
         !st.getPath.getName.startsWith("."))
       .map(st => st.getPath.getName -> st.getLen).toSet
   }
+
+  private val GenSuffix = "-g(\\d+)$".r
+
+  /** The generation number of a `<base>-g<N>` directory (0 if none). */
+  private[llmops] def generationOf(dir: String): Int =
+    GenSuffix.findFirstMatchIn(dir).map(_.group(1).toInt).getOrElse(0)
+
+  /** Superseded generations among a store root's `entries`: siblings
+    * named `<base>-g<N>` for the live subdir's base, other than it.
+    */
+  private[llmops] def staleGenerations(
+      entries: Seq[org.apache.hadoop.fs.FileStatus],
+      live: String): Seq[org.apache.hadoop.fs.FileStatus] = {
+    val base = java.util.regex.Pattern.quote(GenSuffix.replaceAllIn(live, ""))
+    entries.filter { st =>
+      st.isDirectory && st.getPath.getName != live &&
+        st.getPath.getName.matches(s"$base-g\\d+")
+    }
+  }
+
+  /** Orphaned [[writeSidecar]] temps among a store root's `entries`. */
+  private[llmops] def orphanedTemps(
+      entries: Seq[org.apache.hadoop.fs.FileStatus])
+      : Seq[org.apache.hadoop.fs.FileStatus] =
+    entries.filter { st =>
+      st.isFile && st.getPath.getName.startsWith(".") &&
+        st.getPath.getName.contains(".tmp.")
+    }
+
+  /** The integer field `name=<n>` of a `;`-separated sidecar body. */
+  private[llmops] def intField(body: String, name: String): Option[Int] =
+    s"(^|;)$name=(\\d+)(;|$$)".r.findFirstMatchIn(body.trim)
+      .map(_.group(2).toInt)
 
   /** Record `subdir`'s CURRENT data-file set as the store's contents —
     * the atomic commit point of an append or a compaction swap.
@@ -208,27 +231,43 @@ object IndexMaintenance {
     writeSidecar(s, path, name, body)
   }
 
+  /** A parsed manifest: the live generation's subdirectory and the
+    * committed (name, length) file set.
+    */
+  private[llmops] final case class Manifest(subdir: String,
+      files: Set[(String, Long)])
+
+  /** THE manifest parser (read verification, vacuum and fsck share it):
+    * None when the manifest is absent; throws when it does not parse.
+    */
+  private[llmops] def readManifest(s: SparkSession, path: String,
+      name: String): Option[Manifest] =
+    readSidecar(s, path, name).map { m =>
+      val lines = m.trim.split("\n").toSeq
+      require(lines.head.startsWith("dir="), "missing dir= header")
+      Manifest(lines.head.stripPrefix("dir="),
+        lines.tail.filter(_.nonEmpty).map { ln =>
+          val i = ln.lastIndexOf(':')
+          require(i > 0, s"malformed manifest line: $ln")
+          (ln.substring(0, i), ln.substring(i + 1).toLong)
+        }.toSet)
+    }
+
   /** Verify listing == manifest and return the absolute data directory
     * of the current generation. Descriptive failures for a missing
     * manifest, a torn append (unlisted files present), and lost files.
     */
   private[llmops] def verifiedDir(s: SparkSession, path: String,
       name: String, what: String): String = {
-    val m = readSidecar(s, path, name).getOrElse(
+    val m = readManifest(s, path, name).getOrElse(
       throw new IllegalStateException(
         s"$what at $path has no $name manifest — the store was not " +
           "created by build() or its initial ingest did not complete; " +
           "rebuild the index."))
-    val lines = m.trim.split("\n").toSeq
-    val subdir = lines.head.stripPrefix("dir=")
-    val recorded = lines.tail.filter(_.nonEmpty).map { ln =>
-      val i = ln.lastIndexOf(':')
-      (ln.substring(0, i), ln.substring(i + 1).toLong)
-    }.toSet
-    val actual = listDataFiles(s, s"$path/$subdir")
-    if (actual != recorded) {
-      val extra = (actual -- recorded).map(_._1).toSeq.sorted
-      val missing = (recorded -- actual).map(_._1).toSeq.sorted
+    val actual = listDataFiles(s, s"$path/${m.subdir}")
+    if (actual != m.files) {
+      val extra = (actual -- m.files).map(_._1).toSeq.sorted
+      val missing = (m.files -- actual).map(_._1).toSeq.sorted
       throw new IllegalStateException(
         s"$what at $path fails manifest verification: " +
           (if (extra.nonEmpty)
@@ -241,49 +280,7 @@ object IndexMaintenance {
           else "") +
           "— reading would return wrong rows; rebuild the index.")
     }
-    s"$path/$subdir"
-  }
-
-  /** Compact the manifested store under its RECORDED config: rewrite
-    * the current generation's many appended files into ~targetBytes
-    * files in generation N+1, atomically swap via the manifest
-    * publish, then best-effort delete the old generation. Returns
-    * (filesBefore, filesAfter).
-    *
-    * Plain stores (row set preserved) delegate the sizing +
-    * round-robin rewrite to [[graft.etl.Compaction]]. LOG-STRUCTURED
-    * stores whose rows are additive PARTIALS (the [[NgramIndex]]
-    * counts) pass `merge` — the compaction then also AGGREGATES the
-    * partials (the LSM merge step), sized from the pre-merge bytes as
-    * an upper bound.
-    */
-  private[llmops] def compactStore(s: SparkSession, path: String,
-      name: String, what: String, targetBytes: Long,
-      merge: Option[DataFrame => DataFrame] = None): (Int, Int) = {
-    requireMutable(s, path, "compaction")
-    val cur = verifiedDir(s, path, name, what)
-    val curSub = cur.substring(path.length + 1)
-    val gen = "-g(\\d+)$".r.findFirstMatchIn(curSub)
-      .map(_.group(1).toInt).getOrElse(0)
-    val base = "-g(\\d+)$".r.replaceAllIn(curSub, "")
-    val nextSub = s"$base-g${gen + 1}"
-    val before = listDataFiles(s, cur).size
-    merge match {
-      case None =>
-        graft.etl.Compaction.compact(s, cur, s"$path/$nextSub",
-          targetBytes)
-      case Some(m) =>
-        val bytes = listDataFiles(s, cur).map(_._2).sum
-        val n = math.max(1,
-          math.ceil(bytes.toDouble / targetBytes).toInt)
-        m(s.read.parquet(cur)).repartition(n)
-          .write.mode("overwrite").parquet(s"$path/$nextSub")
-    }
-    publishManifest(s, path, name, nextSub)
-    val fs = new org.apache.hadoop.fs.Path(cur)
-      .getFileSystem(s.sparkContext.hadoopConfiguration)
-    fs.delete(new org.apache.hadoop.fs.Path(cur), true)
-    (before, listDataFiles(s, s"$path/$nextSub").size)
+    s"$path/${m.subdir}"
   }
 
   // ---- tombstoned deletes (lazy delete; compaction drops) -----------------
@@ -340,17 +337,7 @@ object IndexMaintenance {
         // happened (and, for TextIndex, one whose stats adjustment
         // never ran, with a fingerprint stamp that would then
         // VALIDATE the mismatch). Sweep it before starting fresh.
-        val conf = s.sparkContext.hadoopConfiguration
-        val root = new org.apache.hadoop.fs.Path(path)
-        val fs = root.getFileSystem(conf)
-        if (fs.exists(root))
-          fs.listStatus(root).toSeq
-            .filter(st => st.isDirectory &&
-              st.getPath.getName.matches("^tombs-g\\d+$"))
-            .foreach { st =>
-              require(fs.delete(st.getPath, true) || !fs.exists(st.getPath),
-                s"could not sweep orphaned tombstone dir ${st.getPath}")
-            }
+        dropTombDirs(s, path, "could not sweep orphaned tombstone dir")
         s"$path/tombs-g0"
     }
     val distinctIds = ids.toDF("id").select(col("id").cast("long"))
@@ -408,7 +395,7 @@ object IndexMaintenance {
         rows.join(tt, rows(idCol) === tt("__tomb_id"), "left_anti")
     }
 
-  /** The physical-drop closure for [[compactStore]]'s merge hook:
+  /** The physical-drop closure for [[MaintainedStore.compact]]'s rewrite:
     * rows minus tombstoned ids on `idCol`, or None when no deletes
     * pend (compaction then stays the plain file rewrite). One
     * definition so the mask semantics cannot drift between stores.
@@ -454,19 +441,24 @@ object IndexMaintenance {
     val tn = tombManifest(manifestName)
     if (readSidecar(s, path, tn).isDefined) {
       retractSidecar(s, path, tn)
-      val conf = s.sparkContext.hadoopConfiguration
-      val root = new org.apache.hadoop.fs.Path(path)
-      val fs = root.getFileSystem(conf)
+      dropTombDirs(s, path, "could not clear tombstone dir")
+    }
+  }
+
+  /** Delete every `tombs-g<N>` directory under the store root, each
+    * delete verified like [[retractSidecar]]: a silently-failed delete
+    * would leave files a future first delete must then sweep.
+    */
+  private def dropTombDirs(s: SparkSession, path: String,
+      failure: String): Unit = {
+    val root = new org.apache.hadoop.fs.Path(path)
+    val fs = fsOf(s, path)
+    if (fs.exists(root))
       fs.listStatus(root).toSeq
         .filter(st => st.isDirectory &&
-          st.getPath.getName.matches("^tombs-g\\d+$"))
-        .foreach { st =>
-          // verified like retractSidecar: a silently-failed delete
-          // would leave files a future first-delete must then sweep
-          require(fs.delete(st.getPath, true) || !fs.exists(st.getPath),
-            s"could not clear tombstone dir ${st.getPath}")
-        }
-    }
+          st.getPath.getName.matches("tombs-g\\d+"))
+        .foreach(st => requireDeleted(fs, st.getPath, recursive = true,
+          failure))
   }
 
   /** What [[vacuumStore]] removed: uncommitted data files inside the
@@ -493,56 +485,33 @@ object IndexMaintenance {
     */
   private[llmops] def vacuumStore(s: SparkSession, path: String,
       name: String, what: String): VacuumReport = {
-    val conf = s.sparkContext.hadoopConfiguration
-    val m = readSidecar(s, path, name).getOrElse(
+    val m = readManifest(s, path, name).getOrElse(
       throw new IllegalStateException(
         s"$what at $path has no $name manifest — nothing defines the " +
           "committed file set, so vacuum cannot distinguish data from " +
           "garbage; rebuild the index."))
-    val lines = m.trim.split("\n").toSeq
-    val subdir = lines.head.stripPrefix("dir=")
-    val recorded = lines.tail.filter(_.nonEmpty).map { ln =>
-      val i = ln.lastIndexOf(':')
-      (ln.substring(0, i), ln.substring(i + 1).toLong)
-    }.toSet
-    val live = new org.apache.hadoop.fs.Path(s"$path/$subdir")
-    val fs = live.getFileSystem(conf)
-    val actual = listDataFiles(s, s"$path/$subdir")
-    val missing = (recorded -- actual).map(_._1).toSeq.sorted
+    val live = new org.apache.hadoop.fs.Path(s"$path/${m.subdir}")
+    val fs = fsOf(s, path)
+    val actual = listDataFiles(s, s"$path/${m.subdir}")
+    val missing = (m.files -- actual).map(_._1).toSeq.sorted
     if (missing.nonEmpty)
       throw new IllegalStateException(
         s"$what at $path cannot be vacuumed: ${missing.size} committed " +
           s"file(s) missing or resized (e.g. ${missing.take(3).mkString(", ")})" +
           " — that is data loss, not leftover garbage; rebuild the index.")
     // 1. uncommitted data files inside the live generation
-    val extras = (actual -- recorded).map(_._1).toSeq.sorted
-    extras.foreach { n =>
-      val p = new org.apache.hadoop.fs.Path(live, n)
-      require(fs.delete(p, false) || !fs.exists(p),
-        s"vacuum could not remove uncommitted file $p")
-    }
-    // 2. superseded generation directories: siblings named
-    //    <base>-g<N> for the live subdir's base, other than the live one
-    val base = "-g(\\d+)$".r.replaceAllIn(subdir, "")
-    val genRe = s"^${java.util.regex.Pattern.quote(base)}-g\\d+$$".r
-    val root = new org.apache.hadoop.fs.Path(path)
-    val stale = fs.listStatus(root).toSeq.filter { st =>
-      st.isDirectory && st.getPath.getName != subdir &&
-        genRe.findFirstIn(st.getPath.getName).isDefined
-    }
-    stale.foreach { st =>
-      require(fs.delete(st.getPath, true) || !fs.exists(st.getPath),
-        s"vacuum could not remove stale generation ${st.getPath}")
-    }
-    // 3. orphaned sidecar temps directly under the store root
-    val temps = fs.listStatus(root).toSeq.filter { st =>
-      st.isFile && st.getPath.getName.startsWith(".") &&
-        st.getPath.getName.contains(".tmp.")
-    }
-    temps.foreach { st =>
-      require(fs.delete(st.getPath, false) || !fs.exists(st.getPath),
-        s"vacuum could not remove orphaned temp ${st.getPath}")
-    }
+    val extras = (actual -- m.files).map(_._1).toSeq.sorted
+    extras.foreach(n => requireDeleted(fs, new org.apache.hadoop.fs.Path(
+      live, n), recursive = false, "vacuum could not remove uncommitted file"))
+    // 2. superseded generation directories, 3. orphaned sidecar temps
+    //    directly under the store root
+    val entries = fs.listStatus(new org.apache.hadoop.fs.Path(path)).toSeq
+    val stale = staleGenerations(entries, m.subdir)
+    stale.foreach(st => requireDeleted(fs, st.getPath, recursive = true,
+      "vacuum could not remove stale generation"))
+    val temps = orphanedTemps(entries)
+    temps.foreach(st => requireDeleted(fs, st.getPath, recursive = false,
+      "vacuum could not remove orphaned temp"))
     VacuumReport(extras.size, stale.size, temps.size)
   }
 
@@ -553,9 +522,9 @@ object IndexMaintenance {
     * stores (including ones every read path would throw on) in one
     * sweep and pick the remediation per store. The three garbage
     * categories are exactly vacuum's; `missingFiles` is the data-loss
-    * case vacuum refuses on; `configMatches` is [[requireConfig]]'s
-    * drift check, reported instead of thrown (None when the store has
-    * no config sidecar or the expected string is unknown).
+    * case vacuum refuses on; `configMatches` is
+    * [[MaintainedStore.requireLive]]'s drift check, reported instead of
+    * thrown (None when the store has no config sidecar).
     */
   final case class FsckReport(
       what: String, path: String,
@@ -768,7 +737,7 @@ object IndexMaintenance {
   // it names WHERE the training corpus lives (a parquet path) plus the
   // reproducible selection rule (a SQL predicate — the split rule the
   // day-0 training applied, e.g. the q190 train-split derivation), so
-  // [[StoreRemediator.act]] can replay "read corpus, filter, retrain,
+  // [[FrozenModel]]'s remediation can replay "read corpus, filter, retrain,
   // republish" end-to-end.
   //
   // LIVE-CORPUS SEMANTICS: the locator names a corpus LOCATION, not a
@@ -857,61 +826,6 @@ object IndexMaintenance {
     out.write("torn-append".getBytes("UTF-8"))
     out.close()
   }
-
-  private[llmops] def fsckStore(s: SparkSession, path: String,
-      manifestName: String, configName: String,
-      expectedConfig: Option[String], what: String): FsckReport = {
-    val conf = s.sparkContext.hadoopConfiguration
-    val root = new org.apache.hadoop.fs.Path(path)
-    val fs = root.getFileSystem(conf)
-    val config = readSidecar(s, path, configName)
-    val matches = expectedConfig.flatMap(e => config.map(_.trim == e))
-    val rootEntries =
-      if (fs.exists(root)) fs.listStatus(root).toSeq else Seq.empty
-    val temps = rootEntries.count { st =>
-      st.isFile && st.getPath.getName.startsWith(".") &&
-        st.getPath.getName.contains(".tmp.")
-    }
-    // a manifest that exists but does not PARSE is reported as absent
-    // (manifestPresent=false): the store needs a rebuild either way,
-    // and the audit must never throw — one corrupted store would
-    // otherwise abort a whole StoreAudit sweep
-    val parsed = readSidecar(s, path, manifestName).flatMap { m =>
-      scala.util.Try {
-        val lines = m.trim.split("\n").toSeq
-        require(lines.head.startsWith("dir="), "missing dir= header")
-        val subdir = lines.head.stripPrefix("dir=")
-        val recorded = lines.tail.filter(_.nonEmpty).map { ln =>
-          val i = ln.lastIndexOf(':')
-          require(i > 0, s"malformed manifest line: $ln")
-          (ln.substring(0, i), ln.substring(i + 1).toLong)
-        }.toSet
-        (subdir, recorded)
-      }.toOption
-    }
-    val trainStats = readTrainStats(s, path)
-    parsed match {
-      case None =>
-        FsckReport(what, path, config.isDefined, matches,
-          manifestPresent = false, generation = -1, 0, 0L, 0, 0, 0, temps,
-          trainStats)
-      case Some((subdir, recorded)) =>
-        val actual = listDataFiles(s, s"$path/$subdir")
-        val gen = "-g(\\d+)$".r.findFirstMatchIn(subdir)
-          .map(_.group(1).toInt).getOrElse(0)
-        val base = "-g(\\d+)$".r.replaceAllIn(subdir, "")
-        val genRe = s"^${java.util.regex.Pattern.quote(base)}-g\\d+$$".r
-        val stale = rootEntries.count { st =>
-          st.isDirectory && st.getPath.getName != subdir &&
-            genRe.findFirstIn(st.getPath.getName).isDefined
-        }
-        FsckReport(what, path, config.isDefined, matches,
-          manifestPresent = true, gen,
-          recorded.size, recorded.map(_._2).sum,
-          (actual -- recorded).size, (recorded -- actual).size,
-          stale, temps, trainStats)
-    }
-  }
 }
 
 /** The persisted MinHash-LSH signature index behind incremental dedup
@@ -919,7 +833,8 @@ object IndexMaintenance {
   * `signatures-g<N>/` (doc_id, band, sig) parquet (current generation
   * named by `_dedup_index_manifest`) + `_dedup_index_config`.
   */
-object DedupIndex {
+object DedupIndex extends MaintainedStore("dedup", "dedup_index",
+    "signatures", "Dedup signature index") {
 
   /** The signature recipe this build produces — recorded at build,
     * verified at every append/probe. Any change to the MinHash
@@ -934,25 +849,8 @@ object DedupIndex {
   /** Band-match floor for "duplicate" — the q41/q45/q46 threshold. */
   val MatchBands = 4
 
-  private val ManifestName = "_dedup_index_manifest"
-
-  /** Crash recovery: remove provably-uncommitted garbage (torn-append
-    * leftovers, superseded generations, orphaned sidecar temps) so the
-    * committed store verifies and reads again — see
-    * [[IndexMaintenance.vacuumStore]].
-    */
-  def vacuum(s: SparkSession, path: String): IndexMaintenance.VacuumReport =
-    IndexMaintenance.vacuumWithTombstones(s, path, ManifestName, What)
-
-  /** Non-throwing audit — see [[IndexMaintenance.fsckStore]]. */
-  def fsck(s: SparkSession, path: String): IndexMaintenance.FsckReport =
-    IndexMaintenance.fsckStore(s, path, ManifestName,
-      "_dedup_index_config", Some(Config), What)
-  private val What = "Dedup signature index"
-
-  /** The manifest-verified current data directory (spec/harness use). */
-  private[graft] def dataDir(s: SparkSession, path: String): String =
-    IndexMaintenance.verifiedDir(s, path, ManifestName, What)
+  protected def expectedConfig(recorded: String): String = Config
+  override protected def tombIdCol: Option[String] = Some("doc_id")
 
   /** Initial build: signatures of the accepted corpus, then the
     * manifest (committing the file set), then the config sidecar (the
@@ -961,11 +859,9 @@ object DedupIndex {
     */
   def build(docs: DataFrame, path: String): Unit = {
     val s = docs.sparkSession
-    Dedup.bandSignaturesOf(docs)
-      .write.mode("overwrite").parquet(s"$path/signatures-g0")
-    IndexMaintenance.publishManifest(s, path, ManifestName,
-      "signatures-g0")
-    IndexMaintenance.writeSidecar(s, path, "_dedup_index_config", Config)
+    buildCommit(s, path)(
+      Dedup.bandSignaturesOf(docs).write.mode("overwrite").parquet(_))
+    IndexMaintenance.writeSidecar(s, path, configName, Config)
   }
 
   /** The stored signature table (config- AND manifest-verified: a torn
@@ -974,24 +870,17 @@ object DedupIndex {
     * near-duplicates immediately, before any physical rewrite.
     */
   def signatures(s: SparkSession, path: String): DataFrame = {
-    IndexMaintenance.requireConfig(s, path, "_dedup_index_config",
-      Config, What)
-    IndexMaintenance.minusTombstones(s, path, ManifestName, What,
-      s.read.parquet(dataDir(s, path)), "doc_id")
+    requireLive(s, path)
+    masked(s, path, s.read.parquet(dataDir(s, path)))
   }
 
-  /** DELETE docs from the index (takedown/opt-out): records
-    * tombstones — every probe from this point treats the docs as
-    * absent ([[signatures]] masks them) — and the next [[compact]]
-    * drops their signature rows physically and clears the tombstones.
-    * One manifested append, no data file touched.
+  /** DELETE docs from the index (takedowns, opt-outs): tombstones — every
+    * probe from this point treats the docs as absent ([[signatures]]
+    * masks them) — and the next [[compact]] drops their signature rows
+    * physically and clears the tombstones.
     */
-  def delete(docIds: DataFrame, path: String): Unit = {
-    val s = docIds.sparkSession
-    IndexMaintenance.requireConfig(s, path, "_dedup_index_config",
-      Config, What)
-    IndexMaintenance.addTombstones(s, path, ManifestName, What, docIds)
-  }
+  def delete(docIds: DataFrame, path: String): Unit =
+    tombstoneDelete(docIds, path)
 
   /** READ-ONLY probe: the rows of `newDocs` that survive dedup against
     * the index — a new doc is dropped when it shares >= [[MatchBands]]
@@ -1032,46 +921,16 @@ object DedupIndex {
     */
   def append(newDocs: DataFrame, path: String): DataFrame = {
     val s = newDocs.sparkSession
-    // refuse BEFORE any write — a late refusal would leave uncommitted
-    // garbage inside a store other gates' oracles pin
-    IndexMaintenance.requireMutable(s, path, "signature append")
-    val newSigs = SessionScratch.transientCheckpoint(
-      Dedup.bandSignaturesOf(newDocs))
-    val survivors = SessionScratch.transientCheckpoint(
-      probeWithSigs(newDocs, newSigs, path))
-    // the probe above verified the manifest; resolve the committed
-    // generation once, append the survivors' signatures into it, then
-    // publish the widened manifest — the COMMIT of this append. A crash
-    // between the parquet write and the publish leaves uncommitted
-    // part-files that the next read rejects descriptively.
-    val cur = dataDir(s, path)
-    newSigs.join(survivors.select(col("doc_id")), Seq("doc_id"),
-        "left_semi")
-      .write.mode("append").parquet(cur)
-    IndexMaintenance.publishManifest(s, path, ManifestName,
-      cur.substring(path.length + 1))
-    survivors
-  }
-
-  /** Compact the accumulated append files under the RECORDED config
-    * (daily appends otherwise grow the file count forever): rewrite
-    * into ~targetBytes files in the next generation directory, swap
-    * atomically via the manifest, delete the old generation. Pending
-    * tombstones ([[delete]]) are DROPPED physically during the rewrite
-    * and then cleared — the probe answers identically before and after
-    * (masked == dropped; IndexMaintenanceSpec proves both invariants),
-    * and the config sidecar — the signature recipe — is untouched.
-    */
-  def compact(s: SparkSession, path: String,
-      targetBytes: Long = 64L * 1024 * 1024): (Int, Int) = {
-    IndexMaintenance.requireConfig(s, path, "_dedup_index_config",
-      Config, What)
-    val drop = IndexMaintenance.tombstoneDropper(s, path, ManifestName,
-      What, "doc_id")
-    val r = IndexMaintenance.compactStore(s, path, ManifestName, What,
-      targetBytes, merge = drop)
-    IndexMaintenance.clearTombstones(s, path, ManifestName)
-    r
+    appendCommit(s, path, "signature append") { cur =>
+      val newSigs = SessionScratch.transientCheckpoint(
+        Dedup.bandSignaturesOf(newDocs))
+      val survivors = SessionScratch.transientCheckpoint(
+        probeWithSigs(newDocs, newSigs, path))
+      newSigs.join(survivors.select(col("doc_id")), Seq("doc_id"),
+          "left_semi")
+        .write.mode("append").parquet(cur)
+      survivors
+    }
   }
 }
 
@@ -1095,10 +954,10 @@ object DedupIndex {
   * Crash safety is the [[DedupIndex]] discipline with one more moving
   * part: append publishes postings files → stats sidecar → manifest,
   * in that order; a crash between ANY two steps leaves uncommitted
-  * part-files that the manifest check rejects descriptively, so a
-  * stats/postings mismatch can never be silently read.
+  * part-files that the manifest check rejects descriptively.
   */
-object TextIndex {
+object TextIndex extends MaintainedStore("bm25", "text_index", "postings",
+    "Full-text BM25 index") {
 
   /** Tokenizer + scoring recipe (the q74 contract): whitespace tokens
     * of trimmed text, rational BM25 idf (no log — see TextAnalysis),
@@ -1107,26 +966,10 @@ object TextIndex {
   val Config: String =
     "tok=whitespace-trim-split;score=bm25-rational;k1tf=2.2;b=0.75;v=1"
 
-  private val ManifestName = "_text_index_manifest"
+  protected def expectedConfig(recorded: String): String = Config
+  override protected def tombIdCol: Option[String] = Some("doc_id")
 
-  /** Crash recovery: remove provably-uncommitted garbage (torn-append
-    * leftovers, superseded generations, orphaned sidecar temps) so the
-    * committed store verifies and reads again — see
-    * [[IndexMaintenance.vacuumStore]].
-    */
-  def vacuum(s: SparkSession, path: String): IndexMaintenance.VacuumReport =
-    IndexMaintenance.vacuumWithTombstones(s, path, ManifestName, What)
-
-  /** Non-throwing audit — see [[IndexMaintenance.fsckStore]]. */
-  def fsck(s: SparkSession, path: String): IndexMaintenance.FsckReport =
-    IndexMaintenance.fsckStore(s, path, ManifestName,
-      "_text_index_config", Some(Config), What)
   private val StatsName = "_text_index_stats"
-  private val What = "Full-text BM25 index"
-
-  /** The manifest-verified current postings directory. */
-  private[graft] def dataDir(s: SparkSession, path: String): String =
-    IndexMaintenance.verifiedDir(s, path, ManifestName, What)
 
   /** Postings of a documents frame: one row per (doc, term) with the
     * term frequency and the doc length — the single tokenize pass a
@@ -1168,15 +1011,15 @@ object TextIndex {
   def stats(s: SparkSession, path: String): (Long, Long) = {
     val raw = IndexMaintenance.readSidecar(s, path, StatsName)
       .getOrElse(throw new IllegalStateException(
-        s"$What at $path has no $StatsName sidecar — initial ingest " +
+        s"$what at $path has no $StatsName sidecar — initial ingest " +
           "did not complete; rebuild the index."))
     val m = raw.trim.split(";").map { kv =>
       val Array(k, v) = kv.split("=", 2); k -> v
     }.toMap
-    val current = IndexMaintenance.tombFingerprint(s, path, ManifestName)
+    val current = IndexMaintenance.tombFingerprint(s, path, manifestName)
     if (current.isDefined && !m.get("tombs").contains(current.get))
       throw new IllegalStateException(
-        s"$What at $path has tombstones its stats sidecar never saw " +
+        s"$what at $path has tombstones its stats sidecar never saw " +
           "(a delete crashed between the tombstone publish and the " +
           "stats adjustment) — BM25 would score with a wrong N/avgdl; " +
           "run TextIndex.repairStats to recompute them from the " +
@@ -1193,14 +1036,12 @@ object TextIndex {
     * write.
     */
   def repairStats(s: SparkSession, path: String): (Long, Long) = {
-    IndexMaintenance.requireConfig(s, path, "_text_index_config",
-      Config, What)
     val perDoc = postings(s, path)
       .groupBy(col("doc_id")).agg(max(col("dl")).as("dl"))
     val r = perDoc.agg(count(lit(1)), sum(col("dl"))).head()
     val (n, dl) = (r.getLong(0), if (r.isNullAt(1)) 0L else r.getLong(1))
     writeStats(s, path, n, dl,
-      IndexMaintenance.tombFingerprint(s, path, ManifestName))
+      IndexMaintenance.tombFingerprint(s, path, manifestName))
     (n, dl)
   }
 
@@ -1215,17 +1056,16 @@ object TextIndex {
     */
   def delete(docIds: DataFrame, path: String): Unit = {
     val s = docIds.sparkSession
-    IndexMaintenance.requireConfig(s, path, "_text_index_config",
-      Config, What)
     val ids = docIds.toDF("id").select(col("id").cast("long"))
-    // effective set: present in the (already-masked) postings —
-    // CHECKPOINTED so the stats rollup and the tombstone write share
-    // one postings scan instead of re-running the lineage twice (the
-    // dedupIngest discipline). Caveat shared with [[repairStats]]: a
-    // doc whose text trims to ZERO tokens has no posting rows, so it
-    // can neither be tombstoned nor decrement n_docs here — it also
-    // can never match a term, but idf's N keeps counting it until a
-    // rebuild; takedown feeds for such docs are a corpus-side concern.
+    // effective set: present in the (already-masked, config-verified)
+    // postings — CHECKPOINTED so the stats rollup and the tombstone
+    // write share one postings scan instead of re-running the lineage
+    // twice (the dedupIngest discipline). Caveat shared with
+    // [[repairStats]]: a doc whose text trims to ZERO tokens has no
+    // posting rows, so it can neither be tombstoned nor decrement
+    // n_docs here — it also can never match a term, but idf's N keeps
+    // counting it until a rebuild; takedown feeds for such docs are a
+    // corpus-side concern.
     val eff = SessionScratch.transientCheckpoint(
       postings(s, path)
         .join(ids, col("doc_id") === col("id"), "left_semi")
@@ -1235,10 +1075,9 @@ object TextIndex {
       (r.getLong(0), if (r.isNullAt(1)) 0L else r.getLong(1))
     if (nDel > 0) {
       val (n0, dl0) = stats(s, path)
-      IndexMaintenance.addTombstones(s, path, ManifestName, What,
-        eff.select(col("doc_id")))
+      tombstoneDelete(eff.select(col("doc_id")), path)
       writeStats(s, path, n0 - nDel, dl0 - dlDel,
-        IndexMaintenance.tombFingerprint(s, path, ManifestName))
+        IndexMaintenance.tombFingerprint(s, path, manifestName))
     }
   }
 
@@ -1247,11 +1086,12 @@ object TextIndex {
     */
   def build(docs: DataFrame, path: String): Unit = {
     val s = docs.sparkSession
-    postingsOf(docs).write.mode("overwrite").parquet(s"$path/postings-g0")
-    val (n, dl) = statsOf(docs)
-    writeStats(s, path, n, dl)
-    IndexMaintenance.publishManifest(s, path, ManifestName, "postings-g0")
-    IndexMaintenance.writeSidecar(s, path, "_text_index_config", Config)
+    buildCommit(s, path) { dir =>
+      postingsOf(docs).write.mode("overwrite").parquet(dir)
+      val (n, dl) = statsOf(docs)
+      writeStats(s, path, n, dl)
+    }
+    IndexMaintenance.writeSidecar(s, path, configName, Config)
   }
 
   /** The stored postings (config- and manifest-verified), with
@@ -1259,10 +1099,8 @@ object TextIndex {
     * never count a deleted doc.
     */
   def postings(s: SparkSession, path: String): DataFrame = {
-    IndexMaintenance.requireConfig(s, path, "_text_index_config",
-      Config, What)
-    IndexMaintenance.minusTombstones(s, path, ManifestName, What,
-      s.read.parquet(dataDir(s, path)), "doc_id")
+    requireLive(s, path)
+    masked(s, path, s.read.parquet(dataDir(s, path)))
   }
 
   /** MAINTENANCE: tokenize ONLY the new docs, append their postings,
@@ -1272,16 +1110,12 @@ object TextIndex {
     */
   def append(newDocs: DataFrame, path: String): Unit = {
     val s = newDocs.sparkSession
-    IndexMaintenance.requireConfig(s, path, "_text_index_config",
-      Config, What)
-    IndexMaintenance.requireMutable(s, path, "postings append")
-    val cur = dataDir(s, path)
-    val (n0, dl0) = stats(s, path)
-    postingsOf(newDocs).write.mode("append").parquet(cur)
-    val (n1, dl1) = statsOf(newDocs)
-    writeStats(s, path, n0 + n1, dl0 + dl1)
-    IndexMaintenance.publishManifest(s, path, ManifestName,
-      cur.substring(path.length + 1))
+    appendCommit(s, path, "postings append") { cur =>
+      val (n0, dl0) = stats(s, path)
+      postingsOf(newDocs).write.mode("append").parquet(cur)
+      val (n1, dl1) = statsOf(newDocs)
+      writeStats(s, path, n0 + n1, dl0 + dl1)
+    }
   }
 
   /** BM25 search off the MAINTAINED index — q74's exact scoring
@@ -1321,29 +1155,22 @@ object TextIndex {
       .limit(topk)
   }
 
-  /** Compact the accumulated posting appends (config preserved, atomic
-    * manifest swap — see [[DedupIndex.compact]]). Pending tombstones
-    * are dropped physically and cleared; the stats NUMBERS are already
-    * correct (adjusted at delete time), so only the fingerprint stamp
-    * is stripped.
+  /** [[MaintainedStore.compact]] plus the stats step: the stats NUMBERS
+    * are already correct (adjusted at delete time) and are verified
+    * against the tombstone set BEFORE the rewrite; after it only the
+    * fingerprint stamp is stripped.
     */
-  def compact(s: SparkSession, path: String,
-      targetBytes: Long = 64L * 1024 * 1024): (Int, Int) = {
-    IndexMaintenance.requireConfig(s, path, "_text_index_config",
-      Config, What)
+  override def compact(s: SparkSession, path: String,
+      targetBytes: Long): (Int, Int) = {
     val (n0, dl0) = stats(s, path)
-    val drop = IndexMaintenance.tombstoneDropper(s, path, ManifestName,
-      What, "doc_id")
-    val r = IndexMaintenance.compactStore(s, path, ManifestName, What,
-      targetBytes, merge = drop)
-    IndexMaintenance.clearTombstones(s, path, ManifestName)
+    val r = super.compact(s, path, targetBytes)
     writeStats(s, path, n0, dl0)
     r
   }
 }
 
 /** The persisted bigram language model behind q76's quality scoring —
-  * the LOG-STRUCTURED member of the maintained-index family. Its state
+  * the LOG-STRUCTURED member of the maintained-store family. Its state
   * is ADDITIVE (bigram counts), so maintenance uses the LSM pattern
   * the other stores don't need: appends land the DELTA's partial
   * counts as new rows (the same int64 gh may appear in many files),
@@ -1358,7 +1185,8 @@ object TextIndex {
   * gate requires the maintained model to reproduce q76's from-scratch
   * computation bit-exactly.
   */
-object NgramIndex {
+object NgramIndex extends MaintainedStore("ngram", "ngram_index", "counts",
+    "Bigram LM index") {
 
   /** The counting recipe (q76's): whitespace tokens of trimmed text,
     * per-token charpoly hash, positional 2-gram span hash.
@@ -1367,25 +1195,23 @@ object NgramIndex {
     "tok=whitespace-trim-split;tokhash=charpoly-1000000007;" +
       "span=positional-2gram;v=1"
 
-  private val ManifestName = "_ngram_index_manifest"
+  protected def expectedConfig(recorded: String): String = Config
 
-  /** Crash recovery: remove provably-uncommitted garbage (torn-append
-    * leftovers, superseded generations, orphaned sidecar temps) so the
-    * committed store verifies and reads again — see
-    * [[IndexMaintenance.vacuumStore]].
+  /** The LSM merge: partials aggregated to one (gh, freq) per gh, keys
+    * whose partials annihilate to zero dropped — exactly as a rebuild
+    * without the deleted docs would never produce them (a zero-count
+    * row left in would still match the score join and skew n_bigrams).
     */
-  def vacuum(s: SparkSession, path: String): IndexMaintenance.VacuumReport =
-    IndexMaintenance.vacuumWithTombstones(s, path, ManifestName, What)
+  private def merged(partials: DataFrame): DataFrame =
+    partials.groupBy(col("gh")).agg(sum(col("freq")).as("freq"))
+      .filter(col("freq") > 0)
 
-  /** Non-throwing audit — see [[IndexMaintenance.fsckStore]]. */
-  def fsck(s: SparkSession, path: String): IndexMaintenance.FsckReport =
-    IndexMaintenance.fsckStore(s, path, ManifestName,
-      "_ngram_index_config", Some(Config), What)
-  private val What = "Bigram LM index"
-
-  /** The manifest-verified current counts directory. */
-  private[graft] def dataDir(s: SparkSession, path: String): String =
-    IndexMaintenance.verifiedDir(s, path, ManifestName, What)
+  /** Compaction is the LSM merge step: reads answer identically before
+    * and after because they always merge; what changes is the stored
+    * row count (and with it every future read's merge cost).
+    */
+  override protected def compactRewrite(s: SparkSession,
+      path: String): Option[DataFrame => DataFrame] = Some(merged)
 
   /** (gh, freq) partial counts of a documents frame — q76's bigram
     * pipeline ending at the count aggregation.
@@ -1400,39 +1226,25 @@ object NgramIndex {
 
   def build(docs: DataFrame, path: String): Unit = {
     val s = docs.sparkSession
-    bigramCounts(docs).write.mode("overwrite").parquet(s"$path/counts-g0")
-    IndexMaintenance.publishManifest(s, path, ManifestName, "counts-g0")
-    IndexMaintenance.writeSidecar(s, path, "_ngram_index_config", Config)
+    buildCommit(s, path)(
+      bigramCounts(docs).write.mode("overwrite").parquet(_))
+    IndexMaintenance.writeSidecar(s, path, configName, Config)
   }
 
   /** MAINTENANCE: count ONLY the new docs' bigrams and append the
     * partial rows — delta-sized, commutative, never reads the corpus
     * counts.
     */
-  def append(newDocs: DataFrame, path: String): Unit = {
-    val s = newDocs.sparkSession
-    IndexMaintenance.requireConfig(s, path, "_ngram_index_config",
-      Config, What)
-    IndexMaintenance.requireMutable(s, path, "bigram append")
-    val cur = dataDir(s, path)
-    bigramCounts(newDocs).write.mode("append").parquet(cur)
-    IndexMaintenance.publishManifest(s, path, ManifestName,
-      cur.substring(path.length + 1))
-  }
+  def append(newDocs: DataFrame, path: String): Unit =
+    appendCommit(newDocs.sparkSession, path, "bigram append")(
+      bigramCounts(newDocs).write.mode("append").parquet(_))
 
   /** The MERGED model: partials aggregated to one (gh, freq) per gh —
-    * the read-side LSM merge (config- and manifest-verified). Keys
-    * whose partials annihilate to zero (fully [[delete]]d bigrams) are
-    * dropped here, exactly as a rebuild without those docs would never
-    * produce them — a zero-count row left in would still match the
-    * score join and skew n_bigrams.
+    * the read-side LSM merge (config- and manifest-verified).
     */
   def lm(s: SparkSession, path: String): DataFrame = {
-    IndexMaintenance.requireConfig(s, path, "_ngram_index_config",
-      Config, What)
-    s.read.parquet(dataDir(s, path))
-      .groupBy(col("gh")).agg(sum(col("freq")).as("freq"))
-      .filter(col("freq") > 0)
+    requireLive(s, path)
+    merged(s.read.parquet(dataDir(s, path)))
   }
 
   /** DELETE docs from the model — the LSM ANTI-RECORD: the additive
@@ -1444,17 +1256,10 @@ object NgramIndex {
     * (the additive store has no membership to check against; the
     * takedown feed carries the stored rows by construction).
     */
-  def delete(docs: DataFrame, path: String): Unit = {
-    val s = docs.sparkSession
-    IndexMaintenance.requireConfig(s, path, "_ngram_index_config",
-      Config, What)
-    val cur = dataDir(s, path)
-    bigramCounts(docs)
-      .select(col("gh"), (-col("freq")).as("freq"))
-      .write.mode("append").parquet(cur)
-    IndexMaintenance.publishManifest(s, path, ManifestName,
-      cur.substring(path.length + 1))
-  }
+  def delete(docs: DataFrame, path: String): Unit =
+    appendCommit(docs.sparkSession, path, "bigram delete")(
+      bigramCounts(docs).select(col("gh"), (-col("freq")).as("freq"))
+        .write.mode("append").parquet(_))
 
   /** q76's per-document quality scores computed against the MAINTAINED
     * model: the scored docs' bigrams re-derive at query time (a pure
@@ -1476,40 +1281,19 @@ object NgramIndex {
           col("n_bigrams").cast(DoubleType)).as("avg_freq"))
       .orderBy(col("doc_id"))
   }
-
-  /** The LSM MERGE compaction: aggregate the partial rows down to one
-    * per gh into generation N+1 (atomic manifest swap). Reads answer
-    * identically before and after because they always merge; what
-    * changes is the stored row count (and with it every future read's
-    * merge cost).
-    */
-  def compact(s: SparkSession, path: String,
-      targetBytes: Long = 64L * 1024 * 1024): (Int, Int) = {
-    IndexMaintenance.requireConfig(s, path, "_ngram_index_config",
-      Config, What)
-    IndexMaintenance.compactStore(s, path, ManifestName, What,
-      targetBytes,
-      merge = Some(df =>
-        df.groupBy(col("gh")).agg(sum(col("freq")).as("freq"))
-          .filter(col("freq") > 0)))
-  }
 }
 
 /** The persisted BPE tokenizer MODEL — the trained-artifact member of
   * the maintained family (the indexes hold derived DATA; this holds a
-  * trained TRANSFORM). A production tokenizer is trained once on a
-  * frozen corpus snapshot and then applied, fixed, to every later
-  * batch — retraining per batch would silently change every token id
-  * downstream — so the artifact is IMMUTABLE: no append path exists by
-  * design, and "maintenance" is an explicit retrain + republish (a new
-  * model version), exactly like the IVF centroids. Layout at `path`:
-  * `merges-g0/` (merge_rank, lhs, rhs, cnt) parquet + manifest +
+  * trained TRANSFORM, see [[FrozenModel]]). Layout at `path`:
+  * `merges-g<N>/` (merge_rank, lhs, rhs, cnt) parquet + manifest +
   * `_bpe_model_config` recording the training recipe; a load under a
   * drifted recipe (different round count, segmentation, or tie-break)
   * fails descriptively instead of producing a tokenizer that encodes
   * differently than the recorded training did.
   */
-object BpeModel {
+object BpeModel extends MaintainedStore("bpe", "bpe_model", "merges",
+    "BPE tokenizer model") with FrozenModel[Bpe.Trained] {
 
   /** The training recipe (Bpe.trainOn's contract): Sennrich-style
     * greedy merges, [[Bpe.Rounds]] rounds, non-letter word split,
@@ -1519,112 +1303,18 @@ object BpeModel {
     s"algo=bpe-greedy-merge;rounds=${Bpe.Rounds};wordsplit=nonletter;" +
       "tiebreak=cnt-desc-lhs-rhs;sep=u001f;eow=underscore;v=1"
 
-  private val ManifestName = "_bpe_model_manifest"
-
-  /** Crash recovery: remove provably-uncommitted garbage (torn-append
-    * leftovers, superseded generations, orphaned sidecar temps) so the
-    * committed store verifies and reads again — see
-    * [[IndexMaintenance.vacuumStore]].
-    */
-  def vacuum(s: SparkSession, path: String): IndexMaintenance.VacuumReport =
-    IndexMaintenance.vacuumWithTombstones(s, path, ManifestName, What)
-
-  /** Non-throwing audit — see [[IndexMaintenance.fsckStore]]. */
-  def fsck(s: SparkSession, path: String): IndexMaintenance.FsckReport =
-    IndexMaintenance.fsckStore(s, path, ManifestName,
-      "_bpe_model_config", Some(Config), What)
-  private val What = "BPE tokenizer model"
-
-  /** Persist a trained merge table: merges parquet, manifest, config —
-    * config last as the publish-complete marker (the index-build
-    * discipline; a crash mid-save reads as missing-config, never as a
-    * silently short merge table).
-    *
-    * `nTrain` is the training-corpus DOC count, recorded as
-    * `_train_stats` provenance (round-13 verdict #3: the frozen
-    * transforms drift too — a tokenizer trained on last month's corpus
-    * silently shifts every downstream token id as the corpus grows,
-    * and without provenance the q230 staleness sweep could never flag
-    * it). The transform has no trained cell count, so k=0 and the
-    * 39·k floor is vacuous; the staleness rule needs only
-    * n_train/n_appended.
-    */
-  def save(s: SparkSession, trained: Bpe.Trained, path: String,
-      nTrain: Long): Unit = {
+  protected def table(s: SparkSession, model: Bpe.Trained): DataFrame = {
     import s.implicits._
-    trained.merges.toDF()
-      .coalesce(1)
-      .write.mode("overwrite").parquet(s"$path/merges-g0")
-    IndexMaintenance.publishManifest(s, path, ManifestName, "merges-g0")
-    IndexMaintenance.writeTrainStats(s, path, nTrain, k = 0,
-      kPolicy = "n/a")
-    IndexMaintenance.writeSidecar(s, path, "_bpe_model_config", Config)
+    model.merges.toDF()
   }
 
-  /** The day-2 APPLICATION record — the frozen transform's append
-    * analog (round-13 verdict #3): an index append physically grows
-    * the store, but applying a frozen tokenizer to an arriving batch
-    * leaves the artifact byte-identical while the world it was trained
-    * on grows — exactly the drift the staleness rule thresholds on.
-    * Call once per applied batch with the batch's doc count (the q187
-    * day-2 cadence); [[IndexMaintenance.bumpAppended]]'s single-writer
-    * and crash-direction contracts apply unchanged.
-    */
-  def noteApplied(s: SparkSession, path: String, nDocs: Long): Unit =
-    IndexMaintenance.bumpAppended(s, path, nDocs)
+  protected def retrain(s: SparkSession, train: DataFrame): Bpe.Trained =
+    Bpe.trainOn(Bpe.wordFreqOf(train.select(col("text"))), Bpe.Rounds)
 
-  /** Record where this model's training corpus lives (parquet path +
-    * the train-split predicate — the reproducible recipe day-0
-    * training applied), enabling [[StoreRemediator.act]]'s bpe arm:
-    * a staleness-flagged model with a locator auto-retrains under the
-    * recorded recipe and republishes; without one it stays a
-    * manual-action-queue row (see
-    * [[IndexMaintenance.recordTrainSource]]).
-    */
-  def recordTrainSource(s: SparkSession, path: String,
-      corpusPath: String, where: String): Unit =
-    IndexMaintenance.recordTrainSource(s, path, corpusPath, where)
-
-  /** The recorded (corpusPath, wherePredicate) locator, if any. */
-  private[llmops] def trainSourceOf(s: SparkSession,
-      path: String): Option[(String, String)] =
-    IndexMaintenance.trainSourceOf(s, path)
-
-  /** MAINTENANCE — the explicit retrain + republish this immutable
-    * artifact prescribes (the IVF-centroid contract: no append path;
-    * a new model is a new VERSION). The retrained merge table is
-    * written into generation N+1 and the manifest swapped atomically
-    * (the [[IndexMaintenance.compactStore]] discipline): a loader that
-    * read before the swap saw a complete old model, one that reads
-    * after sees a complete new one, and a crash before the manifest
-    * publish leaves the OLD model live — never a mixed or partial
-    * table. The recorded training recipe must match (republish is a
-    * retrain under the SAME recipe; a recipe change is a different
-    * model and belongs at a different path).
-    */
-  def republish(s: SparkSession, trained: Bpe.Trained,
-      path: String, nTrain: Long): Unit = {
-    IndexMaintenance.requireConfig(s, path, "_bpe_model_config",
-      Config, What)
-    IndexMaintenance.requireMutable(s, path, "model republish")
-    val cur = IndexMaintenance.verifiedDir(s, path, ManifestName, What)
-    val curSub = cur.substring(path.length + 1)
-    val gen = "-g(\\d+)$".r.findFirstMatchIn(curSub)
-      .map(_.group(1).toInt).getOrElse(0)
-    val nextSub = s"merges-g${gen + 1}"
-    import s.implicits._
-    trained.merges.toDF()
-      .coalesce(1)
-      .write.mode("overwrite").parquet(s"$path/$nextSub")
-    IndexMaintenance.publishManifest(s, path, ManifestName, nextSub)
-    // a retrain consumes all prior applications by definition — fresh
-    // provenance, n_appended reset (the index-republish contract)
-    IndexMaintenance.writeTrainStats(s, path, nTrain, k = 0,
-      kPolicy = "n/a")
-    val fs = new org.apache.hadoop.fs.Path(cur)
-      .getFileSystem(s.sparkContext.hadoopConfiguration)
-    fs.delete(new org.apache.hadoop.fs.Path(cur), true)
-  }
+  // the trained vocab frame stays localCheckpoint-pinned after trainOn —
+  // dead once the merge table is republished
+  protected def release(model: Bpe.Trained): Unit =
+    SessionScratch.releaseCheckpoint(model.vocab)
 
   /** Load the merge table (config- and manifest-verified, then
     * structurally verified: exactly [[Bpe.Rounds]] merges with ranks
@@ -1634,15 +1324,13 @@ object BpeModel {
     * still zero joins and zero shuffles.
     */
   def load(s: SparkSession, path: String): Seq[Bpe.Merge] = {
-    IndexMaintenance.requireConfig(s, path, "_bpe_model_config",
-      Config, What)
-    val dir = IndexMaintenance.verifiedDir(s, path, ManifestName, What)
+    requireLive(s, path)
     import s.implicits._
-    val ms = s.read.parquet(dir).as[Bpe.Merge].collect()
+    val ms = s.read.parquet(dataDir(s, path)).as[Bpe.Merge].collect()
       .sortBy(_.merge_rank).toSeq
     if (ms.map(_.merge_rank) != (1L to Bpe.Rounds.toLong))
       throw new IllegalStateException(
-        s"$What at $path stores merge ranks " +
+        s"$what at $path stores merge ranks " +
           s"[${ms.map(_.merge_rank).mkString(",")}] but the recorded " +
           s"config requires exactly 1..${Bpe.Rounds} — the merge table " +
           "is truncated or doubled; republish the model.")
@@ -1650,18 +1338,15 @@ object BpeModel {
   }
 }
 
-/** The persisted quality-classifier MODEL — the second trained-TRANSFORM
-  * member of the maintained family (with [[BpeModel]]): q176's
-  * distilled student is a ≤(buckets+1)-row integer weight table, and
-  * production scores every later batch with a FROZEN snapshot of it —
-  * retraining per batch would shift the keep/drop boundary under the
-  * pipeline silently. Same contract as the BPE model: IMMUTABLE, no
-  * append path; maintenance is retrain + [[republish]] (atomic
-  * generation swap). Layout at `path`: `weights-g<N>/` (b, w) parquet +
-  * manifest + `_clf_model_config` recording the training recipe;
-  * config written LAST as the publish-complete marker.
+/** The persisted quality-classifier MODEL — the second frozen
+  * TRANSFORM (with [[BpeModel]]): q176's distilled student is a
+  * ≤(buckets+1)-row integer weight table, and production scores every
+  * later batch with a FROZEN snapshot of it. Layout at `path`:
+  * `weights-g<N>/` (b, w) parquet + manifest + `_clf_model_config`
+  * recording the training recipe.
   */
-object ClfModel {
+object ClfModel extends MaintainedStore("clf", "clf_model", "weights",
+    "classifier model") with FrozenModel[DataFrame] {
 
   /** The training recipe ([[Curation.trainClassifierOn]]'s contract):
     * teacher-labeled batch perceptron, integer power-of-two step decay,
@@ -1672,86 +1357,14 @@ object ClfModel {
       s"step=pow2-decay;teacher=hash-linear;margin=${Curation.MarginMin};" +
       s"buckets=${Curation.ClfBuckets};features=uni+bi+bias;v=1"
 
-  private val ManifestName = "_clf_model_manifest"
+  protected def table(s: SparkSession, model: DataFrame): DataFrame =
+    model.select(col("b"), col("w"))
 
-  /** Crash recovery: remove provably-uncommitted garbage (torn-append
-    * leftovers, superseded generations, orphaned sidecar temps) so the
-    * committed store verifies and reads again — see
-    * [[IndexMaintenance.vacuumStore]].
-    */
-  def vacuum(s: SparkSession, path: String): IndexMaintenance.VacuumReport =
-    IndexMaintenance.vacuumWithTombstones(s, path, ManifestName, What)
+  protected def retrain(s: SparkSession, train: DataFrame): DataFrame =
+    Curation.trainClassifierOn(s, train.select(col("doc_id"), col("text"))).w
 
-  /** Non-throwing audit — see [[IndexMaintenance.fsckStore]]. */
-  def fsck(s: SparkSession, path: String): IndexMaintenance.FsckReport =
-    IndexMaintenance.fsckStore(s, path, ManifestName,
-      "_clf_model_config", Some(Config), What)
-  private val What = "classifier model"
-
-  /** Persist a trained weight table (the [[BpeModel.save]] discipline:
-    * weights → manifest → config last). `nTrain` is the training-corpus
-    * doc count, recorded as `_train_stats` provenance so the q230
-    * staleness sweep can flag a scorer whose keep/drop boundary was
-    * trained on a corpus the pipeline has since outgrown (see
-    * [[BpeModel.save]]).
-    */
-  def save(s: SparkSession, w: DataFrame, path: String,
-      nTrain: Long): Unit = {
-    w.select(col("b"), col("w"))
-      .coalesce(1)
-      .write.mode("overwrite").parquet(s"$path/weights-g0")
-    IndexMaintenance.publishManifest(s, path, ManifestName, "weights-g0")
-    IndexMaintenance.writeTrainStats(s, path, nTrain, k = 0,
-      kPolicy = "n/a")
-    IndexMaintenance.writeSidecar(s, path, "_clf_model_config", Config)
-  }
-
-  /** The day-2 application record — [[BpeModel.noteApplied]]'s contract
-    * for the frozen scorer: call once per scored batch with its doc
-    * count.
-    */
-  def noteApplied(s: SparkSession, path: String, nDocs: Long): Unit =
-    IndexMaintenance.bumpAppended(s, path, nDocs)
-
-  /** Record where this model's training corpus lives — see
-    * [[BpeModel.recordTrainSource]] (the clf arm retrains via
-    * [[Curation.trainClassifierOn]] over the located rows).
-    */
-  def recordTrainSource(s: SparkSession, path: String,
-      corpusPath: String, where: String): Unit =
-    IndexMaintenance.recordTrainSource(s, path, corpusPath, where)
-
-  /** The recorded (corpusPath, wherePredicate) locator, if any. */
-  private[llmops] def trainSourceOf(s: SparkSession,
-      path: String): Option[(String, String)] =
-    IndexMaintenance.trainSourceOf(s, path)
-
-  /** MAINTENANCE — retrain + republish into generation N+1 with an
-    * atomic manifest swap (the [[BpeModel.republish]] contract: a torn
-    * republish leaves the OLD model live; a loader never sees a mixed
-    * weight table).
-    */
-  def republish(s: SparkSession, w: DataFrame, path: String,
-      nTrain: Long): Unit = {
-    IndexMaintenance.requireConfig(s, path, "_clf_model_config",
-      Config, What)
-    IndexMaintenance.requireMutable(s, path, "model republish")
-    val cur = IndexMaintenance.verifiedDir(s, path, ManifestName, What)
-    val curSub = cur.substring(path.length + 1)
-    val gen = "-g(\\d+)$".r.findFirstMatchIn(curSub)
-      .map(_.group(1).toInt).getOrElse(0)
-    val nextSub = s"weights-g${gen + 1}"
-    w.select(col("b"), col("w"))
-      .coalesce(1)
-      .write.mode("overwrite").parquet(s"$path/$nextSub")
-    IndexMaintenance.publishManifest(s, path, ManifestName, nextSub)
-    // fresh provenance — a retrain consumes all prior applications
-    IndexMaintenance.writeTrainStats(s, path, nTrain, k = 0,
-      kPolicy = "n/a")
-    val fs = new org.apache.hadoop.fs.Path(cur)
-      .getFileSystem(s.sparkContext.hadoopConfiguration)
-    fs.delete(new org.apache.hadoop.fs.Path(cur), true)
-  }
+  protected def release(model: DataFrame): Unit =
+    SessionScratch.releaseCheckpoint(model)
 
   /** Load the weight table (config- and manifest-verified, then
     * structurally verified: every bucket id within [0, buckets] — the
@@ -1761,16 +1374,14 @@ object ClfModel {
     * bounded read, exactly like the IVF centroid pull.
     */
   def load(s: SparkSession, path: String): DataFrame = {
-    IndexMaintenance.requireConfig(s, path, "_clf_model_config",
-      Config, What)
-    val dir = IndexMaintenance.verifiedDir(s, path, ManifestName, What)
-    val w = s.read.parquet(dir).select(col("b"), col("w"))
+    requireLive(s, path)
+    val w = s.read.parquet(dataDir(s, path)).select(col("b"), col("w"))
     val bad = w.filter(col("b") < 0 ||
       col("b") > Curation.ClfBuckets).count()
     val dup = w.groupBy(col("b")).count().filter(col("count") > 1).count()
     if (bad > 0 || dup > 0)
       throw new IllegalStateException(
-        s"$What at $path fails the structural check: $bad weight row(s) " +
+        s"$what at $path fails the structural check: $bad weight row(s) " +
           s"outside bucket range [0, ${Curation.ClfBuckets}], $dup " +
           "duplicated bucket(s) — the weight table is foreign or " +
           "doubled; republish the model.")
@@ -1782,8 +1393,15 @@ object ClfModel {
   * `path`: `centroids/` (cell, centroid) + `assignments-g<N>/`
   * (member_id, cell, em) parquet (current generation named by
   * `_ivf_index_manifest`) + `_ivf_index_config`.
+  *
+  * IvfIndex deliberately does NOT retrain on append: new vectors are
+  * assigned under the RECORDED centroids (the production IVF contract —
+  * FAISS's `add` after `train`). Cell balance degrades as the
+  * distribution drifts; the monitoring operator for that is q171
+  * (embedding drift), and the remediation is [[republish]].
   */
-object IvfIndex {
+object IvfIndex extends MaintainedStore("ivf", "ivf_index", "assignments",
+    "IVF index") with AnnStore {
 
   /** Lloyd iterations at initial training (the q52/q54 recipe). */
   val Iters = 2
@@ -1792,35 +1410,9 @@ object IvfIndex {
     s"kind=ivf-spherical-kmeans;k=$k;iters=$Iters;fixed_point=1e7;" +
       "seed=first-k-by-id;v=1"
 
-  private def centDir(path: String) = s"$path/centroids"
-  private val ManifestName = "_ivf_index_manifest"
-
-  /** Crash recovery: remove provably-uncommitted garbage (torn-append
-    * leftovers, superseded generations, orphaned sidecar temps) so the
-    * committed store verifies and reads again — see
-    * [[IndexMaintenance.vacuumStore]].
-    */
-  def vacuum(s: SparkSession, path: String): IndexMaintenance.VacuumReport =
-    IndexMaintenance.vacuumWithTombstones(s, path, ManifestName, What)
-
-  /** Non-throwing audit — see [[IndexMaintenance.fsckStore]]. The
-    * recipe is parametric in k, so the expected config is re-derived
-    * from the RECORDED k (drift in any other recipe field still
-    * reports configMatches=false; an unparseable sidecar reports None).
-    */
-  def fsck(s: SparkSession, path: String): IndexMaintenance.FsckReport = {
-    val expected = IndexMaintenance
-      .readSidecar(s, path, "_ivf_index_config")
-      .flatMap(r => "k=(\\d+)".r.findFirstMatchIn(r)
-        .map(m => config(m.group(1).toInt)))
-    IndexMaintenance.fsckStore(s, path, ManifestName,
-      "_ivf_index_config", expected, What)
-  }
-  private val What = "IVF index"
-
-  /** The manifest-verified current assignment directory. */
-  private[graft] def dataDir(s: SparkSession, path: String): String =
-    IndexMaintenance.verifiedDir(s, path, ManifestName, What)
+  protected def expectedConfig(recorded: String): String =
+    config(IndexMaintenance.intField(recorded, "k").getOrElse(0))
+  override protected def tombIdCol: Option[String] = Some("member_id")
 
   /** The indexed member rows (member_id, cell, em) with tombstoned
     * members MASKED — THE read surface for every consumer (search,
@@ -1830,27 +1422,12 @@ object IvfIndex {
     * bypasses deletes and is reserved for specs/harnesses.
     */
   def members(s: SparkSession, path: String): DataFrame =
-    IndexMaintenance.minusTombstones(s, path, ManifestName, What,
-      s.read.parquet(dataDir(s, path)), "member_id")
+    masked(s, path, s.read.parquet(dataDir(s, path)))
 
-  /** DELETE vectors from the index (the FAISS remove_ids contract,
-    * tombstone form): one manifested tombstone append; [[members]]
-    * masks the rows immediately and the next [[compact]] drops them
-    * physically. Centroids are untouched — deletes never retrain (the
-    * remediation for drift remains [[republish]]).
-    */
-  def delete(vecIds: DataFrame, path: String): Unit = {
-    val s = vecIds.sparkSession
-    IndexMaintenance.requireConfig(s, path, "_ivf_index_config",
-      config(recordedKOf(s, path)), What)
-    IndexMaintenance.addTombstones(s, path, ManifestName, What, vecIds)
-  }
-
-  private[llmops] def recordedKOf(s: SparkSession, path: String): Int =
-    IndexMaintenance.readSidecar(s, path, "_ivf_index_config")
-      .flatMap(c => ";k=(\\d+);".r.findFirstMatchIn(c)
-        .map(_.group(1).toInt))
-      .getOrElse(0)
+  protected def remediationCorpus(s: SparkSession, label: String,
+      path: String): DataFrame =
+    members(s, path).select(col("member_id").as("vec_id"),
+      col("em").as("embedding"))
 
   /** Initial build: train k centroids on the corpus (the expensive,
     * corpus-sized step), persist centroids AND the corpus assignment
@@ -1871,110 +1448,27 @@ object IvfIndex {
       IndexMaintenance.kFor(embeddings.count()),
       s"occ${IndexMaintenance.OccTarget}")
 
+  protected def rebuild(embeddings: DataFrame, path: String, k: Int,
+      kPolicy: String, recorded: String): Unit =
+    buildImpl(embeddings, path, k, kPolicy)
+
   private def buildImpl(embeddings: DataFrame, path: String, k: Int,
       kPolicy: String): Unit = {
     val s = embeddings.sparkSession
     import s.implicits._
-    val (cents, nTrain) =
-      KMeans.fitStats(s, embeddings, k = k, iters = Iters)
-    cents.map(c => (c.cell, c.centroid.toSeq)).toDF("cell", "centroid")
-      .coalesce(1)
-      .write.mode("overwrite").parquet(centDir(path))
-    KMeans.assign(embeddings, cents)
-      .select(col("vec_id").as("member_id"), col("cell"),
-        col("embedding").as("em"))
-      .write.mode("overwrite").parquet(s"$path/assignments-g0")
-    IndexMaintenance.publishManifest(s, path, ManifestName,
-      "assignments-g0")
-    IndexMaintenance.writeTrainStats(s, path, nTrain, k, kPolicy)
-    IndexMaintenance.writeSidecar(s, path, "_ivf_index_config", config(k))
-  }
-
-  /** MAINTENANCE — drift remediation (the q171-monitor → rebuild arm),
-    * IN PLACE and crash-detectably. Rebuilding a LIVE index by calling
-    * [[build]] directly is silently dangerous: the old config sidecar
-    * stays valid throughout, so a mid-rebuild crash can pair NEW
-    * centroids with OLD assignments and search returns wrong rows with
-    * no signal. republish RETRACTS the config first — from that moment
-    * every read path fails with the descriptive rebuild error — then
-    * delegates to build(), whose final config publish is the
-    * "ingest complete" marker that puts the index back online. Any
-    * crash in between leaves a config-less store: detected, never
-    * silently absorbed.
-    */
-  def republish(embeddings: DataFrame, path: String, k: Int): Unit = {
-    val s = embeddings.sparkSession
-    // pinned-k contract only — liveness (config presence + full recipe
-    // match) is verified ONCE, inside republishAs, against the record
-    val rec = recordedKOf(s, path)
-    if (rec != 0 && k != rec)
-      throw new IllegalStateException(
-        s"republish at k=$k does not match the recorded k=$rec at " +
-          s"$path — a caller-driven republish keeps the store's shape " +
-          "(rebuild at a new path, or use the remediator's occupancy " +
-          "policy, for a shape change).")
-    republishAs(embeddings, path, k, "explicit")
-  }
-
-  /** Policy-aware drift remediation — the [[republish]] discipline with
-    * the rebuild shape chosen by the CALLER'S policy decision instead
-    * of pinned to the recorded k: liveness is verified against the
-    * store's OWN recorded config (the new k may legitimately differ —
-    * an occupancy-policy store re-sizes k to the corpus it now holds),
-    * and the recorded `k_policy` is whatever the caller passes, so an
-    * auto-k store remediated by [[StoreRemediator]] keeps its policy
-    * instead of silently becoming 'explicit' at a pinned k (which
-    * would recreate the quadratic fixed-k regime SCALING.md measured).
-    */
-  private[llmops] def republishAs(embeddings: DataFrame, path: String,
-      k: Int, kPolicy: String): Unit = {
-    val s = embeddings.sparkSession
-    IndexMaintenance.requireConfig(s, path, "_ivf_index_config",
-      config(recordedKOf(s, path)), What)
-    // refuse BEFORE the config retraction — a late refusal would take
-    // a read-only shared store OFFLINE
-    IndexMaintenance.requireMutable(s, path, "republish")
-    val stale = IndexMaintenance.verifiedDir(s, path, ManifestName, What)
-    IndexMaintenance.retractSidecar(s, path, "_ivf_index_config")
-    // a rebuild indexes exactly the corpus it is handed — pending
-    // tombstones are moot once the old rows are gone
-    IndexMaintenance.clearTombstones(s, path, ManifestName)
-    buildImpl(embeddings, path, k, kPolicy)
-    // the rebuilt index lives at assignments-g0 again; a post-compaction
-    // generation left behind by the old index is unreferenced garbage
-    if (!stale.endsWith("/assignments-g0")) {
-      val p = new org.apache.hadoop.fs.Path(stale)
-      p.getFileSystem(s.sparkContext.hadoopConfiguration).delete(p, true)
+    val nTrain = buildCommit(s, path) { dir =>
+      val (cents, n) = KMeans.fitStats(s, embeddings, k = k, iters = Iters)
+      cents.map(c => (c.cell, c.centroid.toSeq)).toDF("cell", "centroid")
+        .coalesce(1)
+        .write.mode("overwrite").parquet(centDir(path))
+      KMeans.assign(embeddings, cents)
+        .select(col("vec_id").as("member_id"), col("cell"),
+          col("embedding").as("em"))
+        .write.mode("overwrite").parquet(dir)
+      n
     }
-  }
-
-  /** The recorded centroids (k-bounded collect). Config-verified FIRST:
-    * the sidecar is read and checked before the centroid parquet is
-    * touched, so a missing or half-written index fails with the
-    * descriptive rebuild error, not a raw path/analysis error — and the
-    * expected k comes from the RECORD, which the stored table must then
-    * match (previously k was derived from the stored row count, so a
-    * truncated centroid table would have self-certified).
-    */
-  def centroids(s: SparkSession, path: String): Seq[KMeans.Centroid] = {
-    import s.implicits._
-    val k = IndexMaintenance.readSidecar(s, path, "_ivf_index_config")
-      .flatMap(c => ";k=(\\d+);".r.findFirstMatchIn(c).map(_.group(1).toInt))
-      .getOrElse(0)
-    IndexMaintenance.requireConfig(s, path, "_ivf_index_config",
-      config(k), "IVF index")
-    val cents = s.read.parquet(centDir(path))
-      .select(col("cell"), col("centroid"))
-      .as[(Long, Seq[Double])]
-      .collect()
-      .map { case (cell, v) => KMeans.Centroid(cell, v.toArray) }
-      .toSeq
-    if (cents.size != k)
-      throw new IllegalStateException(
-        s"IVF index at $path records k=$k in its sidecar but stores " +
-          s"${cents.size} centroids — the centroid table is truncated or " +
-          "foreign; rebuild the index.")
-    cents.sortBy(_.cell)
+    IndexMaintenance.writeTrainStats(s, path, nTrain, k, kPolicy)
+    IndexMaintenance.writeSidecar(s, path, configName, config(k))
   }
 
   /** MAINTENANCE: assign ONLY the new vectors under the RECORDED
@@ -1985,41 +1479,19 @@ object IvfIndex {
     */
   def append(newVecs: DataFrame, path: String): Unit = {
     val s = newVecs.sparkSession
-    IndexMaintenance.requireMutable(s, path, "vector append")
-    val cents = centroids(s, path)
-    val cur = dataDir(s, path)
-    // checkpointed so the provenance count and the write share ONE
-    // evaluation of the delta's upstream lineage
-    val assigned = SessionScratch.transientCheckpoint(
-      KMeans.assign(newVecs, cents)
-        .select(col("vec_id").as("member_id"), col("cell"),
-          col("embedding").as("em")))
-    val nDelta = assigned.count()
-    assigned.write.mode("append").parquet(cur)
-    // provenance BEFORE the manifest publish — see [[IndexMaintenance
-    // .bumpAppended]]'s crash-direction contract
-    IndexMaintenance.bumpAppended(s, path, nDelta)
-    IndexMaintenance.publishManifest(s, path, ManifestName,
-      cur.substring(path.length + 1))
-  }
-
-  /** Compact the accumulated assignment appends (config preserved,
-    * centroids untouched, atomic manifest swap — see
-    * [[DedupIndex.compact]]). Returns (filesBefore, filesAfter).
-    */
-  def compact(s: SparkSession, path: String,
-      targetBytes: Long = 64L * 1024 * 1024): (Int, Int) = {
-    IndexMaintenance.requireConfig(s, path, "_ivf_index_config",
-      config(recordedKOf(s, path)), What)
-    val drop = IndexMaintenance.tombstoneDropper(s, path, ManifestName,
-      What, "member_id")
-    val r = IndexMaintenance.compactStore(s, path, ManifestName, What,
-      targetBytes, merge = drop)
-    // the tombstoned rows are now PHYSICALLY gone — fold their count
-    // into the trained base so the sidecar matches the store on disk
-    IndexMaintenance.foldDeletesIntoTrain(s, path)
-    IndexMaintenance.clearTombstones(s, path, ManifestName)
-    r
+    appendCommit(s, path, "vector append") { cur =>
+      // checkpointed so the provenance count and the write share ONE
+      // evaluation of the delta's upstream lineage
+      val assigned = SessionScratch.transientCheckpoint(
+        KMeans.assign(newVecs, centroids(s, path))
+          .select(col("vec_id").as("member_id"), col("cell"),
+            col("embedding").as("em")))
+      val nDelta = assigned.count()
+      assigned.write.mode("append").parquet(cur)
+      // provenance BEFORE the manifest publish — see [[IndexMaintenance
+      // .bumpAppended]]'s crash-direction contract
+      IndexMaintenance.bumpAppended(s, path, nDelta)
+    }
   }
 
   /** Search the MAINTAINED index: the q54 probe shape (top-`nprobe`
@@ -2138,10 +1610,10 @@ object IvfIndex {
   * rebuild's (old members' own top-4 lists are never rewritten — the
   * standard insert-only graph contract); the spec floor-asserts
   * maintained recall against the rebuild and [[republish]] is the
-  * drift-remediation rebuild arm, crash-detectable via config
-  * retraction like [[IvfIndex.republish]].
+  * drift-remediation rebuild arm.
   */
-object GraphIndex {
+object GraphIndex extends MaintainedStore("graph", "graph_index", "graph",
+    "kNN-graph index") with AnnStore {
 
   /** Lloyd iterations / default out-degree (q198's recipe). The
     * out-degree is the DiskANN/Vamana R parameter — the graph's
@@ -2152,39 +1624,33 @@ object GraphIndex {
   val Iters = 2
   val Degree = 4
 
-  private def config(k: Int, degree: Int = Degree): String =
+  private def config(k: Int, degree: Int): String =
     s"kind=knn-graph;k=$k;iters=$Iters;degree=$degree;" +
       "fixed_point=1e7;seed=first-k-by-id;entries=cell-medoid;v=1"
 
-  private def centDir(path: String) = s"$path/centroids"
-  private def entDir(path: String) = s"$path/entries"
-  private val ManifestName = "_graph_index_manifest"
-  private val ConfigName = "_graph_index_config"
-  private val What = "kNN-graph index"
-
-  /** Crash recovery — see [[IndexMaintenance.vacuumStore]]. */
-  def vacuum(s: SparkSession, path: String): IndexMaintenance.VacuumReport =
-    IndexMaintenance.vacuumWithTombstones(s, path, ManifestName, What)
-
-  /** Non-throwing audit — parametric k AND degree re-derived like
-    * [[IvfIndex.fsck]].
+  /** The out-degree a config records — appends and republishes extend
+    * the graph at the recorded R, not the compile-time default.
     */
-  def fsck(s: SparkSession, path: String): IndexMaintenance.FsckReport = {
-    val expected = IndexMaintenance.readSidecar(s, path, ConfigName)
-      .flatMap { r =>
-        for {
-          k <- ";k=(\\d+);".r.findFirstMatchIn(r).map(_.group(1).toInt)
-          d <- ";degree=(\\d+);".r.findFirstMatchIn(r)
-            .map(_.group(1).toInt)
-        } yield config(k, d)
-      }
-    IndexMaintenance.fsckStore(s, path, ManifestName,
-      ConfigName, expected, What)
-  }
+  private def degreeOf(recorded: String): Int =
+    IndexMaintenance.intField(recorded, "degree").getOrElse(Degree)
 
-  /** The manifest-verified current row-store directory. */
-  private[graft] def dataDir(s: SparkSession, path: String): String =
-    IndexMaintenance.verifiedDir(s, path, ManifestName, What)
+  protected def expectedConfig(recorded: String): String =
+    config(IndexMaintenance.intField(recorded, "k").getOrElse(0),
+      degreeOf(recorded))
+  override protected def tombIdCol: Option[String] = Some("member_id")
+
+  /** [[delete]] is the DiskANN LAZY-delete contract, deliberately
+    * weaker than [[IvfIndex.delete]]'s: a tombstoned member never
+    * occupies a RESULT rank, but it keeps ROUTING (its edges are still
+    * walked, it can hold beam slots) because dropping a waypoint without
+    * re-wiring its neighborhood would disconnect the graph and silently
+    * sink recall. Physical removal therefore requires the re-wiring
+    * rebuild — [[republish]] (DiskANN's consolidate_deletes) — and
+    * compaction keeps every row and every tombstone.
+    */
+  override protected def compactDropCol: Option[String] = None
+
+  private def entDir(path: String) = s"$path/entries"
 
   /** The graph's member rows (member_id, cell, em) with tombstoned
     * members MASKED — [[IvfIndex.members]]'s read surface for the graph
@@ -2194,28 +1660,14 @@ object GraphIndex {
     * input), not to reconstruct reachability.
     */
   def members(s: SparkSession, path: String): DataFrame =
-    IndexMaintenance.minusTombstones(s, path, ManifestName, What,
+    masked(s, path,
       s.read.parquet(dataDir(s, path)).filter(col("kind") === "m")
-        .select(col("member_id"), col("cell"), col("em")), "member_id")
+        .select(col("member_id"), col("cell"), col("em")))
 
-  private[llmops] def recordedK(s: SparkSession, path: String): Int =
-    IndexMaintenance.readSidecar(s, path, ConfigName)
-      .flatMap(c => ";k=(\\d+);".r.findFirstMatchIn(c)
-        .map(_.group(1).toInt))
-      .getOrElse(0)
-
-  /** The out-degree the graph was BUILT with — appends must extend the
-    * graph at the recorded R, not the compile-time default.
-    */
-  private def recordedDegree(s: SparkSession, path: String): Int =
-    IndexMaintenance.readSidecar(s, path, ConfigName)
-      .flatMap(c => ";degree=(\\d+);".r.findFirstMatchIn(c)
-        .map(_.group(1).toInt))
-      .getOrElse(Degree)
-
-  private def requireLive(s: SparkSession, path: String): Unit =
-    IndexMaintenance.requireConfig(s, path, ConfigName,
-      config(recordedK(s, path), recordedDegree(s, path)), What)
+  protected def remediationCorpus(s: SparkSession, label: String,
+      path: String): DataFrame =
+    members(s, path).select(col("member_id").as("vec_id"),
+      col("em").as("embedding"))
 
   private def memberShape(rows: DataFrame): DataFrame =
     rows.select(col("member_id"), col("cell"), col("em"),
@@ -2245,50 +1697,35 @@ object GraphIndex {
       IndexMaintenance.kFor(embeddings.count()), Degree,
       s"occ${IndexMaintenance.OccTarget}")
 
+  /** A remediation keeps the RECORDED out-degree — it must not silently
+    * halve connectivity (R is the recall knob, SCALING.md r12).
+    */
+  protected def rebuild(embeddings: DataFrame, path: String, k: Int,
+      kPolicy: String, recorded: String): Unit =
+    buildImpl(embeddings, path, k, degreeOf(recorded), kPolicy)
+
   private def buildImpl(embeddings: DataFrame, path: String, k: Int,
       degree: Int, kPolicy: String): Unit = {
     val s = embeddings.sparkSession
     import s.implicits._
-    val (cents, nTrain) =
-      KMeans.fitStats(s, embeddings, k = k, iters = Iters)
-    cents.map(c => (c.cell, c.centroid.toSeq)).toDF("cell", "centroid")
-      .coalesce(1)
-      .write.mode("overwrite").parquet(centDir(path))
-    Similarity.entryPointsOf(embeddings, cents)
-      .coalesce(1)
-      .write.mode("overwrite").parquet(entDir(path))
-    val dir = s"$path/graph-g0"
-    memberShape(KMeans.assign(embeddings, cents)
-        .select(col("vec_id").as("member_id"), col("cell"),
-          col("embedding").as("em")))
-      .write.mode("overwrite").parquet(dir)
-    edgeShape(Similarity.knnGraphOf(embeddings, cents, degree = degree))
-      .write.mode("append").parquet(dir)
-    IndexMaintenance.publishManifest(s, path, ManifestName, "graph-g0")
+    val nTrain = buildCommit(s, path) { dir =>
+      val (cents, n) = KMeans.fitStats(s, embeddings, k = k, iters = Iters)
+      cents.map(c => (c.cell, c.centroid.toSeq)).toDF("cell", "centroid")
+        .coalesce(1)
+        .write.mode("overwrite").parquet(centDir(path))
+      Similarity.entryPointsOf(embeddings, cents)
+        .coalesce(1)
+        .write.mode("overwrite").parquet(entDir(path))
+      memberShape(KMeans.assign(embeddings, cents)
+          .select(col("vec_id").as("member_id"), col("cell"),
+            col("embedding").as("em")))
+        .write.mode("overwrite").parquet(dir)
+      edgeShape(Similarity.knnGraphOf(embeddings, cents, degree = degree))
+        .write.mode("append").parquet(dir)
+      n
+    }
     IndexMaintenance.writeTrainStats(s, path, nTrain, k, kPolicy)
-    IndexMaintenance.writeSidecar(s, path, ConfigName,
-      config(k, degree))
-  }
-
-  /** The recorded centroids (k-bounded collect), config-verified
-    * first — [[IvfIndex.centroids]]'s discipline.
-    */
-  def centroids(s: SparkSession, path: String): Seq[KMeans.Centroid] = {
-    import s.implicits._
-    val k = recordedK(s, path)
-    requireLive(s, path)
-    val cents = s.read.parquet(centDir(path))
-      .select(col("cell"), col("centroid"))
-      .as[(Long, Seq[Double])]
-      .collect()
-      .map { case (cell, v) => KMeans.Centroid(cell, v.toArray) }
-      .toSeq
-    if (cents.size != k)
-      throw new IllegalStateException(
-        s"kNN-graph index at $path records k=$k in its sidecar but " +
-          s"stores ${cents.size} centroids — the centroid table is " +
-          "truncated or foreign; rebuild the index.")
-    cents.sortBy(_.cell)
+    IndexMaintenance.writeSidecar(s, path, configName, config(k, degree))
   }
 
   /** MAINTENANCE — the HNSW insert rule, batched: assign the delta
@@ -2309,60 +1746,60 @@ object GraphIndex {
     */
   def append(newVecs: DataFrame, path: String): Unit = {
     val s = newVecs.sparkSession
-    IndexMaintenance.requireMutable(s, path, "vector append")
-    val cents = centroids(s, path)
-    val cur = dataDir(s, path)
-    // the batch is assigned once; the edge set is checkpointed BEFORE
-    // any write so its lineage can never observe the half-appended dir
-    val newM = SessionScratch.transientCheckpoint(
-      KMeans.assign(newVecs, cents)
-        .select(col("vec_id").as("member_id"), col("cell"),
-          col("embedding").as("em")))
-    val members = s.read.parquet(cur).filter(col("kind") === "m")
-      .select(col("member_id"), col("cell"), col("em"))
-    // per-src top-Degree via the exact-int64 TopK aggregator — the
-    // knnGraphOf shuffle-reduction (map-side prune to Degree rows per
-    // src instead of shuffling the delta × occupancy pair space)
-    val fwd = newM
-      .select(col("cell"), col("member_id").as("ia"), col("em").as("ea"))
-      .join(members.union(newM)
-        .select(col("cell"), col("member_id").as("ib"),
-          col("em").as("eb")), Seq("cell"))
-      .filter(col("ia") =!= col("ib"))
-      .select(col("ia"), col("ib"),
-        graft.functions.VectorDot.fixedDotSum(
-          col("ea").cast("array<double>"),
-          col("eb").cast("array<double>")).as("fdot"))
-      .groupBy(col("ia"))
-      .agg(graft.functions.TopK.topKLong(recordedDegree(s, path))(
-        col("fdot"), col("ib")).as("top"))
-      .select(col("ia").as("src"), explode(col("top.id")).as("dst"))
-    // strays: EVERY batch vector whose cell has no PRE-EXISTING member
-    // additionally edges to the entry points. Membership of the CELL is
-    // the right test — "produced no forward edge" would miss groups
-    // (two strays in the same empty cell edge to each other and form an
-    // island unreachable from the entries), and deriving it from the
-    // cheap distinct-cells anti-join keeps the expensive scored pair
-    // join out of the stray lineage entirely.
-    val entries = s.read.parquet(entDir(path))
-    val strayCells = newM.select(col("cell")).distinct()
-      .join(members.select(col("cell")).distinct(), Seq("cell"),
-        "left_anti")
-    val stray = newM.join(broadcast(strayCells), Seq("cell"), "left_semi")
-      .select(col("member_id").as("ia"))
-      .crossJoin(broadcast(entries))
-      .filter(col("ia") =!= col("cid"))
-      .select(col("ia").as("src"), col("cid").as("dst"))
-    val allFwd = fwd.union(stray)
-    val edges = SessionScratch.transientCheckpoint(
-      allFwd.union(allFwd
-          .select(col("dst").as("src"), col("src").as("dst")))
-        .distinct())
-    memberShape(newM).write.mode("append").parquet(cur)
-    edgeShape(edges).write.mode("append").parquet(cur)
-    IndexMaintenance.bumpAppended(s, path, newM.count())
-    IndexMaintenance.publishManifest(s, path, ManifestName,
-      cur.substring(path.length + 1))
+    appendCommit(s, path, "vector append") { cur =>
+      val cents = centroids(s, path)
+      val degree = degreeOf(
+        IndexMaintenance.readSidecar(s, path, configName).get)
+      // the batch is assigned once; the edge set is checkpointed BEFORE
+      // any write so its lineage can never observe the half-appended dir
+      val newM = SessionScratch.transientCheckpoint(
+        KMeans.assign(newVecs, cents)
+          .select(col("vec_id").as("member_id"), col("cell"),
+            col("embedding").as("em")))
+      val members = s.read.parquet(cur).filter(col("kind") === "m")
+        .select(col("member_id"), col("cell"), col("em"))
+      // per-src top-Degree via the exact-int64 TopK aggregator — the
+      // knnGraphOf shuffle-reduction (map-side prune to Degree rows per
+      // src instead of shuffling the delta × occupancy pair space)
+      val fwd = newM
+        .select(col("cell"), col("member_id").as("ia"), col("em").as("ea"))
+        .join(members.union(newM)
+          .select(col("cell"), col("member_id").as("ib"),
+            col("em").as("eb")), Seq("cell"))
+        .filter(col("ia") =!= col("ib"))
+        .select(col("ia"), col("ib"),
+          graft.functions.VectorDot.fixedDotSum(
+            col("ea").cast("array<double>"),
+            col("eb").cast("array<double>")).as("fdot"))
+        .groupBy(col("ia"))
+        .agg(graft.functions.TopK.topKLong(degree)(
+          col("fdot"), col("ib")).as("top"))
+        .select(col("ia").as("src"), explode(col("top.id")).as("dst"))
+      // strays: EVERY batch vector whose cell has no PRE-EXISTING member
+      // additionally edges to the entry points. Membership of the CELL
+      // is the right test — "produced no forward edge" would miss groups
+      // (two strays in the same empty cell edge to each other and form
+      // an island unreachable from the entries), and deriving it from
+      // the cheap distinct-cells anti-join keeps the expensive scored
+      // pair join out of the stray lineage entirely.
+      val entries = s.read.parquet(entDir(path))
+      val strayCells = newM.select(col("cell")).distinct()
+        .join(members.select(col("cell")).distinct(), Seq("cell"),
+          "left_anti")
+      val stray = newM.join(broadcast(strayCells), Seq("cell"), "left_semi")
+        .select(col("member_id").as("ia"))
+        .crossJoin(broadcast(entries))
+        .filter(col("ia") =!= col("cid"))
+        .select(col("ia").as("src"), col("cid").as("dst"))
+      val allFwd = fwd.union(stray)
+      val edges = SessionScratch.transientCheckpoint(
+        allFwd.union(allFwd
+            .select(col("dst").as("src"), col("src").as("dst")))
+          .distinct())
+      memberShape(newM).write.mode("append").parquet(cur)
+      edgeShape(edges).write.mode("append").parquet(cur)
+      IndexMaintenance.bumpAppended(s, path, newM.count())
+    }
   }
 
   /** Search the MAINTAINED graph: q198's unrolled beam walk with
@@ -2380,79 +1817,21 @@ object GraphIndex {
       s.read.parquet(entDir(path)),
       beam, topk,
       excludeFromResults =
-        IndexMaintenance.tombstones(s, path, ManifestName, What),
+        IndexMaintenance.tombstones(s, path, manifestName, what),
       rounds = rounds)
   }
 
-  /** DELETE members from the graph — the DiskANN LAZY-delete contract,
-    * deliberately weaker than [[IvfIndex.delete]]'s: a tombstoned
-    * member never occupies a RESULT rank, but it keeps ROUTING (its
-    * edges are still walked, it can hold beam slots) because dropping
-    * a waypoint without re-wiring its neighborhood would disconnect
-    * the graph and silently sink recall. Physical removal therefore
-    * requires the re-wiring rebuild — [[republish]] (DiskANN's
-    * consolidate_deletes) — and [[compact]] intentionally does NOT
-    * drop or clear graph tombstones.
-    */
-  def delete(vecIds: DataFrame, path: String): Unit = {
-    val s = vecIds.sparkSession
-    requireLive(s, path)
-    IndexMaintenance.addTombstones(s, path, ManifestName, What, vecIds)
-  }
-
-  /** Compact the accumulated append files (config + centroids +
-    * entries untouched, atomic manifest swap). Row set preserved —
-    * including tombstoned members' rows, which keep routing until
-    * [[republish]] re-wires (see [[delete]]).
-    */
-  def compact(s: SparkSession, path: String,
-      targetBytes: Long = 64L * 1024 * 1024): (Int, Int) = {
-    requireLive(s, path)
-    IndexMaintenance.compactStore(s, path, ManifestName, What,
-      targetBytes)
-  }
-
-  /** Drift remediation — rebuild IN PLACE, crash-detectably
-    * ([[IvfIndex.republish]]'s retract-then-build discipline).
+  /** Drift remediation at the recorded k with the out-degree `degree`
+    * (default: the RECORDED one) — [[AnnStore.republish]] plus the
+    * graph's connectivity budget.
     */
   def republish(embeddings: DataFrame, path: String, k: Int,
-      degree: Option[Int] = None): Unit = {
+      degree: Option[Int]): Unit = {
     val s = embeddings.sparkSession
-    // pinned-k contract only — liveness is verified once in republishAs
-    val rec = recordedK(s, path)
-    if (rec != 0 && k != rec)
-      throw new IllegalStateException(
-        s"republish at k=$k does not match the recorded k=$rec at " +
-          s"$path — a caller-driven republish keeps the store's shape " +
-          "(rebuild at a new path, or use the remediator's occupancy " +
-          "policy, for a shape change).")
-    republishAs(embeddings, path, k, "explicit", degree)
-  }
-
-  /** Policy-aware drift remediation — [[IvfIndex.republishAs]]'s
-    * contract for the graph store: liveness verified against the
-    * RECORDED shape, rebuild at the caller's (k, kPolicy), degree
-    * defaulting to the RECORDED out-degree (a remediation must not
-    * silently halve connectivity — R is the recall knob, SCALING.md
-    * r12).
-    */
-  private[llmops] def republishAs(embeddings: DataFrame, path: String,
-      k: Int, kPolicy: String, degree: Option[Int] = None): Unit = {
-    val s = embeddings.sparkSession
-    val r = degree.getOrElse(recordedDegree(s, path))
-    requireLive(s, path)
-    IndexMaintenance.requireMutable(s, path, "republish")
-    val stale = IndexMaintenance.verifiedDir(s, path, ManifestName, What)
-    IndexMaintenance.retractSidecar(s, path, ConfigName)
-    // the re-wiring rebuild IS the physical-delete arm (DiskANN
-    // consolidate_deletes): the graph is rebuilt over the corpus it is
-    // handed, so pending lazy-delete tombstones are consumed here
-    IndexMaintenance.clearTombstones(s, path, ManifestName)
-    buildImpl(embeddings, path, k, r, kPolicy)
-    if (!stale.endsWith("/graph-g0")) {
-      val p = new org.apache.hadoop.fs.Path(stale)
-      p.getFileSystem(s.sparkContext.hadoopConfiguration).delete(p, true)
-    }
+    requirePinnedK(s, path, k)
+    retractAndRebuild(s, path)(rec =>
+      buildImpl(embeddings, path, k, degree.getOrElse(degreeOf(rec)),
+        "explicit"))
   }
 }
 
@@ -2481,7 +1860,8 @@ object GraphIndex {
   * exact int64, so the gate oracle replays training, encoding, and the
   * search bit-exactly.
   */
-object IvfPqIndex {
+object IvfPqIndex extends MaintainedStore("ivfpq", "ivfpq_index", "codes",
+    "IVF-PQ index") with AnnStore {
 
   /** IVF cells / Lloyd iterations (the q52/q54 recipe). */
   val Iters = 2
@@ -2500,30 +1880,11 @@ object IvfPqIndex {
       "fixed_point=1e7;seed-cells=first-k-by-id;" +
       s"codebook=kmeans-${Iters}iter-seed-first-cb-by-id;v=2"
 
-  private def centDir(path: String) = s"$path/centroids"
+  protected def expectedConfig(recorded: String): String =
+    config(IndexMaintenance.intField(recorded, "k").getOrElse(0))
+  override protected def tombIdCol: Option[String] = Some("vec_id")
+
   private def cbDir(path: String) = s"$path/codebook"
-  private val ManifestName = "_ivfpq_index_manifest"
-  private val What = "IVF-PQ index"
-
-  /** Crash recovery — see [[IndexMaintenance.vacuumStore]]. */
-  def vacuum(s: SparkSession, path: String): IndexMaintenance.VacuumReport =
-    IndexMaintenance.vacuumWithTombstones(s, path, ManifestName, What)
-
-  /** Non-throwing audit — expected config re-derived from the recorded
-    * k (the [[IvfIndex.fsck]] pattern).
-    */
-  def fsck(s: SparkSession, path: String): IndexMaintenance.FsckReport = {
-    val expected = IndexMaintenance
-      .readSidecar(s, path, "_ivfpq_index_config")
-      .flatMap(r => "k=(\\d+)".r.findFirstMatchIn(r)
-        .map(m => config(m.group(1).toInt)))
-    IndexMaintenance.fsckStore(s, path, ManifestName,
-      "_ivfpq_index_config", expected, What)
-  }
-
-  /** The manifest-verified current codes directory. */
-  private[graft] def dataDir(s: SparkSession, path: String): String =
-    IndexMaintenance.verifiedDir(s, path, ManifestName, What)
 
   /** (vec_id, s, pi, fv) — fixed-point subspace decomposition. */
   private def subOf(vecs: DataFrame): DataFrame =
@@ -2563,9 +1924,7 @@ object IvfPqIndex {
   private def codebookRows(s: SparkSession,
       path: String): Seq[PqCodebook.Codeword] = {
     import s.implicits._
-    s.read.parquet(cbDir(path))
-      .select(col("cw"), col("cs"), col("cpi"), col("fc"))
-      .as[PqCodebook.Codeword].collect().toSeq
+    codebook(s, path).as[PqCodebook.Codeword].collect().toSeq
   }
 
   /** Initial build: train IVF centroids AND the per-subspace PQ
@@ -2585,22 +1944,30 @@ object IvfPqIndex {
       IndexMaintenance.kFor(embeddings.count()),
       s"occ${IndexMaintenance.OccTarget}")
 
+  /** A republish retrains BOTH halves (IVF centroids and the
+    * per-subspace PQ codebooks) on the corpus handed in.
+    */
+  protected def rebuild(embeddings: DataFrame, path: String, k: Int,
+      kPolicy: String, recorded: String): Unit =
+    buildImpl(embeddings, path, k, kPolicy)
+
   private def buildImpl(embeddings: DataFrame, path: String, k: Int,
       kPolicy: String): Unit = {
     val s = embeddings.sparkSession
     import s.implicits._
-    val (cents, nTrain) =
-      KMeans.fitStats(s, embeddings, k = k, iters = Iters)
-    cents.map(c => (c.cell, c.centroid.toSeq)).toDF("cell", "centroid")
-      .coalesce(1)
-      .write.mode("overwrite").parquet(centDir(path))
-    val cbRows = PqCodebook.fit(s, embeddings,
-      m = M, cb = Cb, subDim = SubDim, iters = Iters)
-    PqCodebook.toDf(s, cbRows)
-      .coalesce(1).write.mode("overwrite").parquet(cbDir(path))
-    encodeUnder(embeddings, cents, cbRows)
-      .write.mode("overwrite").parquet(s"$path/codes-g0")
-    IndexMaintenance.publishManifest(s, path, ManifestName, "codes-g0")
+    val nTrain = buildCommit(s, path) { dir =>
+      val (cents, n) = KMeans.fitStats(s, embeddings, k = k, iters = Iters)
+      cents.map(c => (c.cell, c.centroid.toSeq)).toDF("cell", "centroid")
+        .coalesce(1)
+        .write.mode("overwrite").parquet(centDir(path))
+      val cbRows = PqCodebook.fit(s, embeddings,
+        m = M, cb = Cb, subDim = SubDim, iters = Iters)
+      PqCodebook.toDf(s, cbRows)
+        .coalesce(1).write.mode("overwrite").parquet(cbDir(path))
+      encodeUnder(embeddings, cents, cbRows)
+        .write.mode("overwrite").parquet(dir)
+      n
+    }
     // n_train covers BOTH trained halves (one corpus, two fits). k is
     // the TRUE cell count; the undertraining floor gates on the larger
     // trained half (cb=16 > k=4 here) via floorK — recording
@@ -2608,18 +1975,8 @@ object IvfPqIndex {
     // wrong cell count
     IndexMaintenance.writeTrainStats(s, path, nTrain, k, kPolicy,
       floorK = Some(math.max(k, Cb)))
-    IndexMaintenance.writeSidecar(s, path, "_ivfpq_index_config",
-      config(k))
+    IndexMaintenance.writeSidecar(s, path, configName, config(k))
   }
-
-  /** The recorded cell count ([[IvfIndex.recordedKOf]]'s accessor for
-    * the codes store).
-    */
-  private[llmops] def recordedKOf(s: SparkSession, path: String): Int =
-    IndexMaintenance.readSidecar(s, path, "_ivfpq_index_config")
-      .flatMap(c => ";k=(\\d+);".r.findFirstMatchIn(c)
-        .map(_.group(1).toInt))
-      .getOrElse(0)
 
   private val RawLocatorName = "_ivfpq_raw_locator"
 
@@ -2629,7 +1986,7 @@ object IvfPqIndex {
     * alongside the codes; q202 composes exactly this pair). With a
     * locator recorded, [[StoreRemediator]] can republish BOTH trained
     * halves of a drift-flagged IVF-PQ store off the raw pair instead
-    * of refusing (round-13 verdict #4).
+    * of refusing.
     *
     * LOCKSTEP ASSUMED: the caller maintains the pair together (every
     * append/delete lands on both stores — q202's contract), so at
@@ -2650,28 +2007,56 @@ object IvfPqIndex {
         .map(_.group(2)))
       .filter(_.nonEmpty)
 
-  /** The recorded centroids — config-verified k-bounded read (the
-    * [[IvfIndex.centroids]] discipline).
+  /** Codes-only: the raw vectors live in the PAIRED store the locator
+    * names; refuse descriptively without one — silently skipping a
+    * FLAGGED store would read as "remediated".
     */
-  def centroids(s: SparkSession, path: String): Seq[KMeans.Centroid] = {
-    import s.implicits._
-    val k = IndexMaintenance.readSidecar(s, path, "_ivfpq_index_config")
-      .flatMap(c => ";k=(\\d+);".r.findFirstMatchIn(c).map(_.group(1).toInt))
-      .getOrElse(0)
-    IndexMaintenance.requireConfig(s, path, "_ivfpq_index_config",
-      config(k), What)
-    val cents = s.read.parquet(centDir(path))
-      .select(col("cell"), col("centroid"))
-      .as[(Long, Seq[Double])]
-      .collect()
-      .map { case (cell, v) => KMeans.Centroid(cell, v.toArray) }
-      .toSeq
-    if (cents.size != k)
+  protected def remediationCorpus(s: SparkSession, label: String,
+      path: String): DataFrame = {
+    val raw = rawSourceOf(s, path).getOrElse(
       throw new IllegalStateException(
-        s"IVF-PQ index at $path records k=$k in its sidecar but stores " +
-          s"${cents.size} centroids — the centroid table is truncated " +
-          "or foreign; rebuild the index.")
-    cents.sortBy(_.cell)
+        s"store $label at $path is flagged for republish but is " +
+          "codes-only with no _ivfpq_raw_locator recorded — " +
+          "remediation cannot reconstruct the corpus from codes; " +
+          "record the paired raw store " +
+          "(IvfPqIndex.recordRawSource) or republish it " +
+          "caller-driven with the source corpus."))
+    IvfIndex.members(s, raw).select(col("member_id").as("vec_id"),
+      col("em").as("embedding"))
+  }
+
+  /** LOCKSTEP cross-check: the locator names a store, not a snapshot —
+    * if the pair missed an append/delete or points at a foreign store,
+    * retraining would silently rebuild over the wrong corpus AND reset
+    * provenance to look fresh. The codes store's sidecar bounds its live
+    * membership: n_train + n_appended is the exact insert total under
+    * the lockstep contract, and n_deleted may OVER-count but never under
+    * (foreign-id deletes, re-deletes across a compact boundary — the
+    * [[IndexMaintenance.TrainStats]] approximation's blessed inputs), so
+    * the true live count sits in
+    * [n_train + n_appended − n_deleted, n_train + n_appended]. Refusing
+    * inside that interval would turn documented-harmless deletes into a
+    * sweep-wide abort; refuse only OUTSIDE it.
+    */
+  override protected def checkCorpus(label: String, path: String,
+      before: IndexMaintenance.TrainStats, nRaw: Long): Unit = {
+    val nUpper = before.nTrain + before.nAppended
+    val nLower = math.max(0L, nUpper - before.nDeleted)
+    if (nRaw < nLower || nRaw > nUpper)
+      throw new IllegalStateException(
+        s"store $label at $path records a raw pair, but the " +
+          s"pair holds $nRaw member(s) while the codes store's " +
+          s"provenance bounds its live membership to " +
+          s"[$nLower, $nUpper] " +
+          s"(n_train=${before.nTrain} + " +
+          s"n_appended=${before.nAppended}, " +
+          s"n_deleted=${before.nDeleted} counted " +
+          "early-never-late) — the pair has diverged " +
+          "(a missed append/delete, or the locator points at a " +
+          "foreign store). Remediating would silently retrain " +
+          "over the wrong corpus; repair the pairing first " +
+          "(re-point the locator or replay the missed " +
+          "maintenance), then re-run the sweep.")
   }
 
   /** MAINTENANCE: assign + encode ONLY the delta under the recorded
@@ -2680,88 +2065,13 @@ object IvfPqIndex {
     */
   def append(newVecs: DataFrame, path: String): Unit = {
     val s = newVecs.sparkSession
-    IndexMaintenance.requireMutable(s, path, "vector append")
-    val cents = centroids(s, path)
-    val cur = dataDir(s, path)
-    val encoded = SessionScratch.transientCheckpoint(
-      encodeUnder(newVecs, cents, codebookRows(s, path)))
-    // one encoded row per (vector, subspace): members = rows / m
-    val nDelta = encoded.count() / M
-    encoded.write.mode("append").parquet(cur)
-    IndexMaintenance.bumpAppended(s, path, nDelta)
-    IndexMaintenance.publishManifest(s, path, ManifestName,
-      cur.substring(path.length + 1))
-  }
-
-  /** DELETE vectors from the index ([[IvfIndex.delete]]'s contract,
-    * codes flavor): tombstone append; [[search]] masks immediately,
-    * the next [[compact]] drops the code rows physically.
-    */
-  def delete(vecIds: DataFrame, path: String): Unit = {
-    val s = vecIds.sparkSession
-    val k = IndexMaintenance.readSidecar(s, path, "_ivfpq_index_config")
-      .flatMap(c => ";k=(\\d+);".r.findFirstMatchIn(c).map(_.group(1).toInt))
-      .getOrElse(0)
-    IndexMaintenance.requireConfig(s, path, "_ivfpq_index_config",
-      config(k), What)
-    IndexMaintenance.addTombstones(s, path, ManifestName, What, vecIds)
-  }
-
-  /** Compact the accumulated code appends (config preserved, centroids
-    * and codebook untouched, atomic manifest swap); pending tombstones
-    * are dropped physically and cleared.
-    */
-  def compact(s: SparkSession, path: String,
-      targetBytes: Long = 64L * 1024 * 1024): (Int, Int) = {
-    val k = IndexMaintenance.readSidecar(s, path, "_ivfpq_index_config")
-      .flatMap(c => ";k=(\\d+);".r.findFirstMatchIn(c).map(_.group(1).toInt))
-      .getOrElse(0)
-    IndexMaintenance.requireConfig(s, path, "_ivfpq_index_config",
-      config(k), What)
-    val drop = IndexMaintenance.tombstoneDropper(s, path, ManifestName,
-      What, "vec_id")
-    val r = IndexMaintenance.compactStore(s, path, ManifestName, What,
-      targetBytes, merge = drop)
-    // physical drop done — fold the delete count into the trained base
-    IndexMaintenance.foldDeletesIntoTrain(s, path)
-    IndexMaintenance.clearTombstones(s, path, ManifestName)
-    r
-  }
-
-  /** Drift remediation — in-place rebuild, crash-detectable via config
-    * retraction (the [[IvfIndex.republish]] contract).
-    */
-  def republish(embeddings: DataFrame, path: String, k: Int): Unit = {
-    val s = embeddings.sparkSession
-    // pinned-k contract only — liveness is verified once in republishAs
-    val rec = recordedKOf(s, path)
-    if (rec != 0 && k != rec)
-      throw new IllegalStateException(
-        s"republish at k=$k does not match the recorded k=$rec at " +
-          s"$path — a caller-driven republish keeps the store's shape " +
-          "(rebuild at a new path, or use the remediator's occupancy " +
-          "policy, for a shape change).")
-    republishAs(embeddings, path, k, "explicit")
-  }
-
-  /** Policy-aware drift remediation — [[IvfIndex.republishAs]]'s
-    * contract for the codes store: BOTH trained halves (IVF centroids
-    * and the per-subspace PQ codebooks) retrain on the corpus handed
-    * in; liveness verified against the RECORDED k.
-    */
-  private[llmops] def republishAs(embeddings: DataFrame, path: String,
-      k: Int, kPolicy: String): Unit = {
-    val s = embeddings.sparkSession
-    IndexMaintenance.requireConfig(s, path, "_ivfpq_index_config",
-      config(recordedKOf(s, path)), What)
-    IndexMaintenance.requireMutable(s, path, "republish")
-    val stale = IndexMaintenance.verifiedDir(s, path, ManifestName, What)
-    IndexMaintenance.retractSidecar(s, path, "_ivfpq_index_config")
-    IndexMaintenance.clearTombstones(s, path, ManifestName)
-    buildImpl(embeddings, path, k, kPolicy)
-    if (!stale.endsWith("/codes-g0")) {
-      val p = new org.apache.hadoop.fs.Path(stale)
-      p.getFileSystem(s.sparkContext.hadoopConfiguration).delete(p, true)
+    appendCommit(s, path, "vector append") { cur =>
+      val encoded = SessionScratch.transientCheckpoint(
+        encodeUnder(newVecs, centroids(s, path), codebookRows(s, path)))
+      // one encoded row per (vector, subspace): members = rows / m
+      val nDelta = encoded.count() / M
+      encoded.write.mode("append").parquet(cur)
+      IndexMaintenance.bumpAppended(s, path, nDelta)
     }
   }
 
@@ -2788,8 +2098,7 @@ object IvfPqIndex {
       .groupBy(col("vec_id").as("aqid"), col("s").as("qs"),
         col("cw").as("qcw"))
       .agg(sum(col("fv") * col("fc")).as("qdot"))
-    val codes = IndexMaintenance.minusTombstones(s, path, ManifestName,
-      What, s.read.parquet(dataDir(s, path)), "vec_id")
+    val codes = masked(s, path, s.read.parquet(dataDir(s, path)))
     val w = org.apache.spark.sql.expressions.Window
       .partitionBy(col("qid")).orderBy(col("f").desc, col("cid"))
     probes.join(codes, Seq("cell"))
@@ -2811,47 +2120,31 @@ object IvfPqIndex {
   * an operator can health-check a whole warehouse of index/model
   * artifacts in one query instead of touching eight read paths that
   * would THROW on the first damaged store. Built on the non-throwing
-  * per-store [[IndexMaintenance.FsckReport]]s; driver-side work is one
-  * bounded sidecar/listing pass per store (catalog metadata, not data).
+  * per-store [[MaintainedStore.fsck]]; the audit costs one bounded
+  * sidecar/listing pass per store (catalog metadata, not data).
   */
 object StoreAudit {
 
-  /** Store kinds accepted by [[audit]], mapped to their fsck — THE
-    * kind registry ([[WarehouseMaintenance]] derives from it; one
-    * list to extend when a ninth store kind lands).
-    */
-  private[llmops] val Kinds: Map[String,
-      (SparkSession, String) => IndexMaintenance.FsckReport] = Map(
-    "dedup" -> (DedupIndex.fsck _),
-    "bm25" -> (TextIndex.fsck _),
-    "ngram" -> (NgramIndex.fsck _),
-    "bpe" -> (BpeModel.fsck _),
-    "clf" -> (ClfModel.fsck _),
-    "ivf" -> (IvfIndex.fsck _),
-    "ivfpq" -> (IvfPqIndex.fsck _),
-    "graph" -> (GraphIndex.fsck _))
-
-  /** Audit `(kind, path)` entries; unknown kinds fail fast (an audit
-    * that silently skipped a store would read as "all healthy").
+  /** Audit `(kind, path)` entries over the [[MaintainedStore.all]]
+    * registry; unknown kinds fail fast (an audit that silently skipped
+    * a store would read as "all healthy").
     */
   def audit(s: SparkSession,
       stores: Seq[(String, String)]): DataFrame = {
     import s.implicits._
-    val bad = stores.map(_._1).filterNot(Kinds.contains).distinct
-    require(bad.isEmpty,
-      s"unknown store kind(s) ${bad.mkString(", ")} — expected one of " +
-        Kinds.keys.toSeq.sorted.mkString(", "))
+    val byKind = MaintainedStore.resolve(stores.map(_._1),
+      MaintainedStore.all, "expected one of")
     stores.map { case (kind, path) =>
-      val r = Kinds(kind)(s, path)
+      val r = byKind(kind).fsck(s, path)
       (kind, r.what, r.path, r.healthy, r.vacuumRepairs,
         r.configPresent, r.configMatches, r.manifestPresent,
         r.generation, r.committedFiles, r.committedBytes,
         r.uncommittedFiles, r.missingFiles, r.staleGenerations,
         r.orphanedTemps,
-        // training provenance (trained ANN stores only — the
-        // `_train_stats` sidecar): sample size, grown-since-training
-        // mass, the FAISS 39·k undertraining verdict, and the
-        // staleness fraction the republish decision thresholds on
+        // training provenance (trained stores only — the `_train_stats`
+        // sidecar): sample size, grown-since-training mass, the FAISS
+        // 39·k undertraining verdict, and the staleness fraction the
+        // republish decision thresholds on
         r.trainStats.map(_.nTrain), r.trainStats.map(_.nAppended),
         r.trainStats.map(_.undertrained), r.trainStats.map(_.drift))
     }.toDF("kind", "store", "path", "healthy", "vacuum_repairs",
@@ -2864,24 +2157,20 @@ object StoreAudit {
 }
 
 /** AUTO-REMEDIATION: the q230 decision rule consumed BY CODE — sweep a
-  * catalog of self-contained ANN stores, republish exactly the ones the
-  * staleness rule flags (over the corpus read OFF each store's own
-  * member rows — the q229/q231 composition), and leave the rest
-  * byte-untouched. This is the complete monitor → decide → act loop a
-  * production warehouse runs on a schedule: q171-class metrics observe,
-  * `_train_stats` records growth, [[needsRepublish]] decides, and the
-  * republish arm (q212/q213's gated operation) remediates.
-  *
-  * Scope: `ivf` and `graph` stores are self-contained — their member
-  * rows carry the raw vectors, so the store IS the corpus record and
-  * remediation needs no external input. The IVF-PQ store is codes-only
-  * BY DESIGN (64× compression): a flagged one remediates through its
-  * recorded raw-vector locator ([[IvfPqIndex.recordRawSource]] — the
-  * FAISS IndexRefineFlat pairing, the q202 composition), republishing
-  * BOTH trained halves off the paired store's member rows; with no
-  * locator recorded it REFUSES descriptively (acting would require a
-  * corpus the warehouse does not know about — the caller-driven q214
-  * arm remains that path).
+  * catalog of trained stores, republish exactly the ones the staleness
+  * rule flags, and leave the rest byte-untouched. This is the complete
+  * monitor → decide → act loop a production warehouse runs on a
+  * schedule: q171-class metrics observe, `_train_stats` records growth,
+  * [[needsRepublish]] decides, and each store's registry remediation
+  * arm ([[MaintainedStore.remediate]]) acts:
+  *  - `ivf` and `graph` stores are self-contained — their member rows
+  *    carry the raw vectors, so the store IS the corpus record;
+  *  - the IVF-PQ store is codes-only BY DESIGN (64× compression): a
+  *    flagged one remediates through its recorded raw-vector locator
+  *    ([[IvfPqIndex.recordRawSource]] — the FAISS IndexRefineFlat
+  *    pairing), and with none it REFUSES descriptively;
+  *  - the frozen transforms (`bpe`, `clf`) retrain through their
+  *    recorded training-corpus locator, and refuse without one.
   *
   * 100 TB shape: the sweep reads sidecars; only FLAGGED stores pay the
   * corpus-sized rebuild — which is the point of thresholding: republish
@@ -2890,53 +2179,14 @@ object StoreAudit {
   */
 object StoreRemediator {
 
-  /** The kinds whose flagged stores this remediator can ACT on:
-    * self-contained member rows (ivf/graph), codes-only with a
-    * recorded raw-vector locator (ivfpq), or frozen transforms with a
-    * recorded training-corpus locator (bpe/clf — round-14 verdict #1).
-    * THE single definition — [[sweepAndRemediate]]'s kind check and
-    * [[WarehouseMaintenance]]'s decide-vs-act split both read it.
-    */
-  private[llmops] val Actable = Set("ivf", "graph", "ivfpq", "bpe", "clf")
-
-  /** The kinds that RECORD training provenance when built by current
-    * code — the set the warehouse sweep's `no-provenance` verdict
-    * gates on. Distinct from [[Actable]] on purpose (the round-14
-    * ADVICE): "records provenance when healthy" is about whether a
-    * missing `_train_stats` means UNDECIDABLE staleness (any trained
-    * kind, actable or not) vs "no staleness exists" (the untrained
-    * dedup/bm25/ngram kinds, whose maintenance is append/compact).
-    */
-  private[llmops] val TrainedKinds =
-    Set("ivf", "graph", "ivfpq", "bpe", "clf")
-
-  /** Whether the warehouse sweep can auto-act on a FLAGGED store of
-    * this kind at this path, or must queue it for manual action:
-    * self-contained kinds always act; a frozen transform acts only
-    * with a recorded training-corpus locator (pre-locator models are
-    * the installed base — their flagged rows ARE the manual-action
-    * queue, never an abort); a codes-only ivfpq store claims actable
-    * even without its raw locator so [[act]]'s refusal SURFACES — the
-    * raw pair is the deployment contract (FAISS IndexRefineFlat), and
-    * a codes store without one is an operator error to abort on, not
-    * an installed base to queue.
-    */
-  private[llmops] def canAutoAct(s: SparkSession, kind: String,
-      path: String): Boolean = kind match {
-    case "ivf" | "graph" | "ivfpq" => true
-    case "bpe" => BpeModel.trainSourceOf(s, path).isDefined
-    case "clf" => ClfModel.trainSourceOf(s, path).isDefined
-    case _ => false
-  }
-
   /** The q230 decision rule: republish when rows appended since
     * training exceed 25% of the LIVE trained base —
     * 3·n_appended > n_train − n_deleted, exact integers (the
     * FAISS/DiskANN "rebuild when inserts exceed X% of the trained
-    * base" practice, delete-aware since round 15: after heavy
-    * takedowns the historical n_train overstates what remains, and a
-    * store whose appends dominate its LIVE membership must flag even
-    * though they are small against the phantom build size).
+    * base" practice, delete-aware: after heavy takedowns the historical
+    * n_train overstates what remains, and a store whose appends
+    * dominate its LIVE membership must flag even though they are small
+    * against the phantom build size).
     */
   def needsRepublish(ts: IndexMaintenance.TrainStats): Boolean =
     3L * ts.nAppended > ts.liveTrainBase
@@ -2965,24 +2215,19 @@ object StoreRemediator {
       case None => (recordedK, ts.kPolicy)
     }
 
-  /** Sweep `(label, kind, path)` stores; republish the flagged ones at
-    * their recorded SHAPE POLICY ([[remediationShape]]: explicit stores
-    * at the recorded k, occupancy-policy stores at k re-sized to the
-    * membership); return one readout row per store with the
-    * before/after provenance and what was done. Unknown kinds fail
-    * fast (the [[StoreAudit.audit]] rule: a silently-skipped store
-    * would read as "remediated").
+  /** Sweep `(label, kind, path)` stores of the trained kinds; republish
+    * the flagged ones at their recorded SHAPE POLICY
+    * ([[remediationShape]]); return one readout row per store with the
+    * before/after provenance and what was done. Unknown kinds fail fast
+    * (the [[StoreAudit.audit]] rule: a silently-skipped store would
+    * read as "remediated").
     */
   def sweepAndRemediate(s: SparkSession,
       stores: Seq[(String, String, String)]): DataFrame = {
     import s.implicits._
-    val bad = stores.map(_._2).filterNot(Actable).distinct
-    require(bad.isEmpty,
-      s"unknown store kind(s) ${bad.mkString(", ")} — remediation " +
-        s"covers ${Actable.toSeq.sorted.mkString(", ")} " +
-        "(self-contained member rows, codes-only with a recorded " +
-        "raw-vector locator, or frozen transforms with a recorded " +
-        "training-corpus locator)")
+    val byKind = MaintainedStore.resolve(stores.map(_._2),
+      MaintainedStore.all.filter(_.trained),
+      "remediation covers the trained kinds")
     stores.map { case (label, kind, path) =>
       val before = IndexMaintenance.readTrainStats(s, path).getOrElse(
         throw new IllegalStateException(
@@ -2990,7 +2235,7 @@ object StoreRemediator {
             "staleness is undecidable; rebuild it with a current " +
             "builder."))
       val acted = needsRepublish(before)
-      if (acted) act(s, label, kind, path, before)
+      if (acted) byKind(kind).remediate(s, label, path, before)
       val after =
         if (acted) IndexMaintenance.readTrainStats(s, path).get
         else before
@@ -3001,136 +2246,15 @@ object StoreRemediator {
     }.toDF("store", "n_train_before", "n_appended_before", "verdict",
       "acted", "n_train_after", "n_appended_after")
   }
-
-  /** The act itself — republish one FLAGGED store at its
-    * [[remediationShape]], corpus read off its own member rows (or the
-    * recorded raw pair for codes-only stores). Shared by
-    * [[sweepAndRemediate]] and [[WarehouseMaintenance.sweep]] so the
-    * two operational entry points can never diverge.
-    */
-  private[llmops] def act(s: SparkSession, label: String, kind: String,
-      path: String, before: IndexMaintenance.TrainStats): Unit =
-    kind match {
-      case "ivf" =>
-        val corpus = SessionScratch.transientCheckpoint(
-          IvfIndex.members(s, path)
-            .select(col("member_id").as("vec_id"),
-              col("em").as("embedding")))
-        val (k, pol) = remediationShape(before,
-          IvfIndex.recordedKOf(s, path), corpus.count())
-        IvfIndex.republishAs(corpus, path, k, pol)
-        // release THIS store's corpus blocks before the next store —
-        // a multi-store sweep otherwise accumulates every corpus in
-        // the block manager until the caller evicts (measured: 8 acts
-        // in one sweep cost 1.6× per store vs one act per sweep —
-        // ScaleIndex `remediation_fanout`)
-        SessionScratch.releaseCheckpoint(corpus)
-      case "graph" =>
-        val corpus = SessionScratch.transientCheckpoint(
-          GraphIndex.members(s, path)
-            .select(col("member_id").as("vec_id"),
-              col("em").as("embedding")))
-        val (k, pol) = remediationShape(before,
-          GraphIndex.recordedK(s, path), corpus.count())
-        GraphIndex.republishAs(corpus, path, k, pol)
-        SessionScratch.releaseCheckpoint(corpus)
-      case "ivfpq" =>
-        // codes-only: the raw vectors live in the PAIRED store the
-        // locator names; refuse descriptively without one — silently
-        // skipping a FLAGGED store would read as "remediated"
-        val raw = IvfPqIndex.rawSourceOf(s, path).getOrElse(
-          throw new IllegalStateException(
-            s"store $label at $path is flagged for republish but is " +
-              "codes-only with no _ivfpq_raw_locator recorded — " +
-              "remediation cannot reconstruct the corpus from codes; " +
-              "record the paired raw store " +
-              "(IvfPqIndex.recordRawSource) or republish it " +
-              "caller-driven with the source corpus."))
-        val corpus = SessionScratch.transientCheckpoint(
-          IvfIndex.members(s, raw)
-            .select(col("member_id").as("vec_id"),
-              col("em").as("embedding")))
-        val nRaw = corpus.count()
-        // LOCKSTEP cross-check (round-14 ADVICE): the locator names a
-        // store, not a snapshot — if the pair missed an append/delete
-        // or points at a foreign store, retraining would silently
-        // rebuild over the wrong corpus AND reset provenance to look
-        // fresh. The codes store's sidecar bounds its live membership:
-        // n_train + n_appended is the exact insert total under the
-        // lockstep contract, and n_deleted may OVER-count but never
-        // under (foreign-id deletes, re-deletes across a compact
-        // boundary — the [[TrainStats]] approximation's blessed
-        // inputs), so the true live count sits in
-        // [n_train + n_appended − n_deleted, n_train + n_appended].
-        // Refusing on anything inside that interval would turn the
-        // provenance design's documented-harmless deletes into a
-        // sweep-wide abort; refuse only OUTSIDE it.
-        val nUpper = before.nTrain + before.nAppended
-        val nLower = math.max(0L, nUpper - before.nDeleted)
-        if (nRaw < nLower || nRaw > nUpper) {
-          SessionScratch.releaseCheckpoint(corpus)
-          throw new IllegalStateException(
-            s"store $label at $path records raw pair $raw, but the " +
-              s"pair holds $nRaw member(s) while the codes store's " +
-              s"provenance bounds its live membership to " +
-              s"[$nLower, $nUpper] " +
-              s"(n_train=${before.nTrain} + " +
-              s"n_appended=${before.nAppended}, " +
-              s"n_deleted=${before.nDeleted} counted " +
-              "early-never-late) — the pair has diverged " +
-              "(a missed append/delete, or the locator points at a " +
-              "foreign store). Remediating would silently retrain " +
-              "over the wrong corpus; repair the pairing first " +
-              "(re-point the locator or replay the missed " +
-              "maintenance), then re-run the sweep.")
-        }
-        val (k, pol) = remediationShape(before,
-          IvfPqIndex.recordedKOf(s, path), nRaw)
-        IvfPqIndex.republishAs(corpus, path, k, pol)
-        SessionScratch.releaseCheckpoint(corpus)
-      case "bpe" =>
-        // frozen transform: the artifact does not carry its training
-        // corpus — the recorded locator names it (the ivfpq raw-pair
-        // pattern). Refuse descriptively without one; the WAREHOUSE
-        // sweep never routes a locator-less transform here (it queues
-        // — see canAutoAct), so this refusal fires only on the pure
-        // remediator's direct path, mirroring ivfpq's.
-        val (src, where) = BpeModel.trainSourceOf(s, path).getOrElse(
-          throw new IllegalStateException(
-            s"store $label at $path is flagged for republish but " +
-              "records no _train_source_locator — a frozen tokenizer " +
-              "cannot be retrained from its merge table; record the " +
-              "training corpus (BpeModel.recordTrainSource) or " +
-              "republish it caller-driven with the training rows."))
-        val train = s.read.parquet(src).where(expr(where))
-          .select(col("text"))
-        val retrained = Bpe.trainOn(Bpe.wordFreqOf(train), Bpe.Rounds)
-        BpeModel.republish(s, retrained, path, nTrain = train.count())
-        // the trained vocab frame stays localCheckpoint-pinned after
-        // trainOn — dead once the merge table is republished
-        SessionScratch.releaseCheckpoint(retrained.vocab)
-      case "clf" =>
-        val (src, where) = ClfModel.trainSourceOf(s, path).getOrElse(
-          throw new IllegalStateException(
-            s"store $label at $path is flagged for republish but " +
-              "records no _train_source_locator — a frozen classifier " +
-              "cannot be retrained from its weight table; record the " +
-              "training corpus (ClfModel.recordTrainSource) or " +
-              "republish it caller-driven with the training rows."))
-        val train = s.read.parquet(src).where(expr(where))
-          .select(col("doc_id"), col("text"))
-        val retrained = Curation.trainClassifierOn(s, train).w
-        ClfModel.republish(s, retrained, path, nTrain = train.count())
-        SessionScratch.releaseCheckpoint(retrained)
-    }
 }
 
-/** The nightly warehouse-maintenance job COMPOSED (round-13 verdict
-  * #6): fsck every store (observe), vacuum exactly the ones fsck says
-  * vacuum repairs (recover), then run the staleness decide-and-act on
-  * the stores that record training provenance (remediate) — the three
-  * proven arms (q233 observes, the per-store vacuums are spec-proven,
-  * q234 acts) as ONE sweep whose readout hashes the whole episode.
+/** The nightly warehouse-maintenance job COMPOSED: fsck every store
+  * (observe), vacuum exactly the ones fsck says vacuum repairs
+  * (recover), then run the staleness decide-and-act on the stores that
+  * record training provenance (remediate) — the three proven arms
+  * (q233 observes, the per-store vacuums are spec-proven, q234 acts) as
+  * ONE sweep over the [[MaintainedStore.all]] registry whose readout
+  * hashes the whole episode.
   *
   * Damage tolerance: a crash-damaged store must never abort the sweep
   * — fsck is non-throwing by construction, vacuum runs only where the
@@ -3140,14 +2264,10 @@ object StoreRemediator {
   * verdict in the same pass. Damage beyond vacuum (data LOSS, config
   * drift) reads out as verdict `damaged` with healthy_after=0 — a
   * rebuild is the only remediation, and acting on such a store would
-  * just hit its read paths' refusal — never a silent skip. What DOES
-  * abort: a FLAGGED codes-only ivfpq store with no raw locator, or
-  * with a raw pair whose membership diverged from the codes store's
-  * provenance ([[StoreRemediator.act]]'s refusals) — operator errors
-  * to surface, not damage to absorb. A FLAGGED frozen transform with
-  * no training-corpus locator does NOT abort: pre-locator models are
-  * the installed base, so their rows queue as `republish`/acted=0
-  * ([[StoreRemediator.canAutoAct]]).
+  * just hit its read paths' refusal — never a silent skip. A FLAGGED
+  * frozen transform with no training-corpus locator does NOT abort:
+  * pre-locator models are the installed base, so their rows queue as
+  * `republish`/acted=0 ([[MaintainedStore.canAutoAct]]).
   *
   * 100 TB shape: per store, fsck is a bounded sidecar/listing read and
   * vacuum touches only garbage files; the only corpus-sized work is
@@ -3156,23 +2276,7 @@ object StoreRemediator {
   */
 object WarehouseMaintenance {
 
-  /** Kind registry — derived from [[StoreAudit.Kinds]] (one list to
-    * extend when a ninth store kind lands).
-    */
-  private val Fscks = StoreAudit.Kinds
-
-  private val Vacuums: Map[String,
-      (SparkSession, String) => IndexMaintenance.VacuumReport] = Map(
-    "dedup" -> (DedupIndex.vacuum _),
-    "bm25" -> (TextIndex.vacuum _),
-    "ngram" -> (NgramIndex.vacuum _),
-    "bpe" -> (BpeModel.vacuum _),
-    "clf" -> (ClfModel.vacuum _),
-    "ivf" -> (IvfIndex.vacuum _),
-    "ivfpq" -> (IvfPqIndex.vacuum _),
-    "graph" -> (GraphIndex.vacuum _))
-
-  /** Run fsck → vacuum-if-repairable → decide(-and-act where the kind
+  /** Run fsck → vacuum-if-repairable → decide(-and-act where the store
     * allows) over `(label, kind, path)` stores; one readout row per
     * store. Unknown kinds fail fast (the [[StoreAudit.audit]] rule).
     *
@@ -3182,7 +2286,7 @@ object WarehouseMaintenance {
     *    config drift): rebuild territory; acting would just hit the
     *    read paths' refusal, so the sweep reports and moves on.
     *  - `republish` — provenance flags staleness. acted=1 when the
-    *    store can be auto-acted ([[StoreRemediator.canAutoAct]]: a
+    *    store can be auto-acted ([[MaintainedStore.canAutoAct]]: a
     *    self-contained ivf/graph, an ivfpq with its raw pair, a
     *    bpe/clf transform with a recorded training-corpus locator —
     *    the rebuild/retrain ran HERE); acted=0 for a
@@ -3190,26 +2294,23 @@ object WarehouseMaintenance {
     *    no locator: retraining needs the training corpus, which the
     *    artifact does not carry and no sidecar names — the row IS the
     *    manual-action queue).
-    *  - `blocked`   — the act itself REFUSED (an ivfpq raw pair that
-    *    diverged from the codes store's recorded membership, or a
-    *    locator whose store is unreadable): the staleness stands, the
-    *    auto-path is unsafe, and a human must repair the pairing —
-    *    but one store's broken pairing must not leave the REST of the
-    *    warehouse unswept, so the refusal files as this store's row
-    *    (same composed-sweep principle as `no-provenance`: the pure
-    *    [[StoreRemediator]] throws, the sweep surfaces per-row). Only
-    *    the refusal type ([[IllegalStateException]], the descriptive
-    *    contract-refusal every store's read/act path uses) is caught;
-    *    a true operator error still aborts.
+    *  - `blocked`   — the act itself REFUSED (an ivfpq without its raw
+    *    pair, or one whose pair diverged from the codes store's recorded
+    *    membership, or a locator whose store is unreadable): the
+    *    staleness stands, the auto-path is unsafe, and a human must
+    *    repair the pairing — but one store's broken pairing must not
+    *    leave the REST of the warehouse unswept, so the refusal files as
+    *    this store's row. Only the refusal type
+    *    ([[IllegalStateException]], the descriptive contract-refusal
+    *    every store's read/act path uses) is caught; a true operator
+    *    error still aborts.
     *  - `ok`        — provenance present, under the threshold.
-    *  - `no-provenance` — a TRAINED kind
-    *    ([[StoreRemediator.TrainedKinds]]: ivf/ivfpq/graph/bpe/clf)
+    *  - `no-provenance` — a TRAINED kind ([[MaintainedStore.trained]])
     *    with no `_train_stats` (predates the sidecar): staleness is
-    *    UNDECIDABLE, which must not read as "nothing to do" — where
-    *    the pure remediator throws, the composed sweep surfaces it
-    *    per-row. Gated on "records provenance when healthy", NOT on
-    *    actability (the round-14 ADVICE): a pre-provenance BpeModel
-    *    is exactly as undecidable as a pre-provenance IVF store.
+    *    UNDECIDABLE, which must not read as "nothing to do". Gated on
+    *    "records provenance when healthy", NOT on actability: a
+    *    pre-provenance BpeModel is exactly as undecidable as a
+    *    pre-provenance IVF store.
     *  - `n/a`       — untrained kinds (dedup/bm25/ngram): no trained
     *    artifact, so no staleness exists; their maintenance is the
     *    append/compact family.
@@ -3217,22 +2318,21 @@ object WarehouseMaintenance {
   def sweep(s: SparkSession,
       stores: Seq[(String, String, String)]): DataFrame = {
     import s.implicits._
-    val bad = stores.map(_._2).filterNot(Fscks.contains).distinct
-    require(bad.isEmpty,
-      s"unknown store kind(s) ${bad.mkString(", ")} — expected one of " +
-        Fscks.keys.toSeq.sorted.mkString(", "))
+    val byKind = MaintainedStore.resolve(stores.map(_._2),
+      MaintainedStore.all, "expected one of")
     stores.map { case (label, kind, path) =>
-      val before = Fscks(kind)(s, path)
+      val store = byKind(kind)
+      val before = store.fsck(s, path)
       val repaired =
-        if (before.vacuumRepairs) Some(Vacuums(kind)(s, path)) else None
-      val post = if (repaired.isDefined) Fscks(kind)(s, path) else before
+        if (before.vacuumRepairs) Some(store.vacuum(s, path)) else None
+      val post = if (repaired.isDefined) store.fsck(s, path) else before
       val (verdict, acted) =
         if (!post.healthy) ("damaged", 0L)
         else post.trainStats match {
           case Some(ts) if StoreRemediator.needsRepublish(ts) =>
-            if (StoreRemediator.canAutoAct(s, kind, path))
+            if (store.canAutoAct(s, path))
               try {
-                StoreRemediator.act(s, label, kind, path, ts)
+                store.remediate(s, label, path, ts)
                 ("republish", 1L)
               } catch { case e: IllegalStateException =>
                 // the act's own refusal (diverged raw pair, unreadable
@@ -3243,15 +2343,14 @@ object WarehouseMaintenance {
               }
             else ("republish", 0L)
           case Some(_) => ("ok", 0L)
-          case None if StoreRemediator.TrainedKinds(kind) =>
-            ("no-provenance", 0L)
+          case None if store.trained => ("no-provenance", 0L)
           case None => ("n/a", 0L)
         }
       // re-fsck only when something changed on disk — the all-healthy
       // warehouse path must cost ONE metadata pass per store, not two
       val after =
         if (repaired.isEmpty && acted == 0L) post
-        else Fscks(kind)(s, path)
+        else store.fsck(s, path)
       (label, kind,
         if (before.healthy) 1 else 0,
         repaired.map(_.uncommittedRemoved).getOrElse(0),

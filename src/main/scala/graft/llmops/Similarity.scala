@@ -3104,30 +3104,30 @@ object Similarity {
         // scorer from sidecar reads alone. No trained cell count →
         // the undertrained floor is vacuous (k = 0)
         ("bpe_stale", existingBpeProvenanceModel(s, dir),
-          (p: String) => BpeModel.fsck(s, p)),
+          BpeModel),
         ("clf_stale", existingClfProvenanceModel(s, dir),
-          (p: String) => ClfModel.fsck(s, p)),
+          ClfModel),
         ("graph_stale", existingGraphIndex(s, dir),
-          (p: String) => GraphIndex.fsck(s, p)),
+          GraphIndex),
         ("ivf_republished", existingRepublishedIvfIndex(s, dir),
-          (p: String) => IvfIndex.fsck(s, p)),
+          IvfIndex),
         ("ivf_stale", existingIvfIndex(s, dir),
-          (p: String) => IvfIndex.fsck(s, p)),
+          IvfIndex),
         // the takedown-heavy store (round-14 verdict #4): a small
         // append wave that is FRESH against the historical build size
         // but STALE against what survives the deletes — only the
         // delete-aware rule flags it
         ("ivf_takedown", existingTakedownIvfIndex(s, dir),
-          (p: String) => IvfIndex.fsck(s, p)),
+          IvfIndex),
         // the IVF-PQ store carries the sweep's LIVE undertrained
         // signal at small corpora: its recorded floor is 39·cb = 624
         // (the codebook is the larger trained half), so a 250-vector
         // even-half build flags undertrained — the sweep reports a
         // training-side deficiency the growth rule alone cannot see
         ("ivfpq_stale", existingIvfPqIndex(s, dir),
-          (p: String) => IvfPqIndex.fsck(s, p)))
-      stores.map { case (label, path, fsck) =>
-        val ts = fsck(path).trainStats.getOrElse(
+          IvfPqIndex))
+      stores.map { case (label, path, store) =>
+        val ts = store.fsck(s, path).trainStats.getOrElse(
           throw new IllegalStateException(
             s"store $label at $path records no _train_stats sidecar — " +
               "it was not built by a trained-store builder; rebuild it."))

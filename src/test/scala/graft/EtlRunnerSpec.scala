@@ -160,10 +160,23 @@ class EtlRunnerSpec extends SparkTestBase {
     // files live under o_orderstatus=X/ subdirs — a top-level listing
     // would see 0 bytes and collapse everything into 1 file
     val all = t.orders.count()
+    def dataFiles(f: java.io.File): Seq[java.io.File] =
+      f.listFiles().toSeq.flatMap { c =>
+        if (c.isDirectory) dataFiles(c)
+        else if (c.getName.endsWith(".parquet")) Seq(c)
+        else Nil
+      }
+    val inputs = dataFiles(new java.io.File(s"$base/part")).size
+    // targetBytes = 1 asks for one file per input byte: the chosen count
+    // must stop at the input's data files (hidden .crc sidecars are not
+    // data), since compaction must never raise the file count
     val (before, chosen) = graft.etl.Compaction.compact(
       spark, s"$base/part", s"$base/out", targetBytes = 1L)
+    info(s"listed $before files ($inputs data files), chose $chosen")
+    assert(before == inputs, s"listing counted $before of $inputs data files")
     assert(before >= 3, s"recursive listing found only $before files")
     assert(chosen > 1, "byte-derived target must exceed one file")
+    assert(chosen <= inputs, s"chose $chosen files for $inputs inputs")
     assert(spark.read.parquet(s"$base/out").count() == all)
   }
 

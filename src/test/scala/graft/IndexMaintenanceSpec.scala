@@ -523,34 +523,6 @@ class IndexMaintenanceSpec extends SparkTestBase {
     graft.ops.SessionScratch.evictTransients()
   }
 
-  test("DedupIndex: a crash MID-COMPACT leaves the store readable off " +
-    "the old generation, and a retried compact self-heals") {
-    val path = freshDir("dedup_crash_cpt")
-    DedupIndex.build(docs.filter(col("doc_id") % 2 === 0), path)
-    val wave = docs.filter(col("doc_id") % 2 === 1)
-    val pre = DedupIndex.probe(wave, path)
-      .select(col("doc_id")).collect().map(_.getLong(0)).sorted
-    // simulate a compact that wrote generation 1 but crashed BEFORE the
-    // manifest publish: leftover files in signatures-g1, manifest still
-    // pointing at g0
-    graft.etl.Compaction.compact(spark,
-      DedupIndex.dataDir(spark, path), s"$path/signatures-g1",
-      64L * 1024 * 1024)
-    assert(DedupIndex.dataDir(spark, path).endsWith("signatures-g0"),
-      "an unpublished compaction must not become visible")
-    val mid = DedupIndex.probe(wave, path)
-      .select(col("doc_id")).collect().map(_.getLong(0)).sorted
-    assert(mid.sameElements(pre),
-      "probe must answer identically off the old generation")
-    // the retried compact overwrites the leftover generation and swaps
-    val (_, after) = DedupIndex.compact(spark, path)
-    assert(after >= 1)
-    assert(DedupIndex.dataDir(spark, path).endsWith("signatures-g1"))
-    val post = DedupIndex.probe(wave, path)
-      .select(col("doc_id")).collect().map(_.getLong(0)).sorted
-    assert(post.sameElements(pre))
-  }
-
   test("IvfIndex: torn assignment append is detected; compaction keeps " +
     "search row-identical with centroids and config untouched") {
     val path = freshDir("ivf_cpt")
@@ -733,20 +705,6 @@ class IndexMaintenanceSpec extends SparkTestBase {
     assert(!new java.io.File(path, "weights-g0").exists(),
       "old generation must be deleted after the swap")
     assert(new java.io.File(path, "weights-g1").exists())
-  }
-
-  test("BpeModel: a torn save (merges written, config not yet " +
-    "published) reads as rebuild-required, not as a silent model") {
-    val path = freshDir("bpe_model_torn")
-    val train = docs.filter(col("doc_id") % 2 === 0).select(col("text"))
-    BpeModel.save(spark, Bpe.trainOn(Bpe.wordFreqOf(train), Bpe.Rounds),
-      path, nTrain = 250)
-    // config is written LAST by save(); deleting it replays the state
-    // of a crash between the merges write and the publish
-    assert(new java.io.File(path, "_bpe_model_config").delete())
-    val e = intercept[IllegalStateException](BpeModel.load(spark, path))
-    assert(e.getMessage.contains("did not complete"),
-      s"torn-save error must be descriptive: ${e.getMessage}")
   }
 
   // ---- IVF-PQ: the codes-only persisted index ---------------------------
@@ -2332,47 +2290,39 @@ class IndexMaintenanceSpec extends SparkTestBase {
   test("_shared_readonly: every mutation path refuses AT the mutation " +
     "site naming the owners, before any byte changes; reads, fsck and " +
     "vacuum stay allowed") {
-    val path = freshDir("ro")
-    IvfIndex.build(embs.filter(col("vec_id") % 2 === 0), path, k = 4)
-    IndexMaintenance.markSharedReadonly(spark, path, "q180,q233")
-    val before = dataFiles(IvfIndex.dataDir(spark, path))
-    val q = embs.filter(col("vec_id") < 10)
-      .select(col("vec_id").as("qid"), col("embedding").as("eq"))
-    val res = IvfIndex.search(q, path).collect()
-    assert(res.nonEmpty, "reads must keep working on a marked store")
-    def refused(body: => Unit): String = {
-      val e = intercept[IllegalStateException](body)
-      assert(e.getMessage.contains("read-only") &&
-        e.getMessage.contains("q180") &&
-        e.getMessage.toLowerCase.contains("clone"), e.getMessage)
-      e.getMessage
+    val cases = StoreCase.all(spark, sfDir)
+    graft.llmops.MaintainedStore.all.foreach { st =>
+      val c = cases(st.kind)
+      val path = freshDir(s"ro_${st.kind}")
+      c.build(path)
+      IndexMaintenance.markSharedReadonly(spark, path, "q180,q233")
+      val before = dataFiles(st.dataDir(spark, path))
+      val res = c.read(path)
+      assert(res.nonEmpty, s"${st.kind}: reads must keep working on a " +
+        "marked store")
+      val mutations = Seq("build" -> c.build,
+          "compact" -> ((p: String) => { st.compact(spark, p); () })) ++
+        c.append.map("append" -> _) ++ c.delete.map("delete" -> _) ++
+        c.republish.map("republish" -> _) ++
+        c.provenanceBump.map("provenance bump" -> _)
+      mutations.foreach { case (op, m) =>
+        val e = intercept[IllegalStateException](m(path))
+        assert(e.getMessage.contains("read-only") &&
+          e.getMessage.contains("q180") &&
+          e.getMessage.toLowerCase.contains("clone"),
+          s"${st.kind} $op: ${e.getMessage}")
+      }
+      // the refusals were EARLY: no garbage entered the store, the
+      // config is still live, and the answers are unchanged
+      val fsck = st.fsck(spark, path)
+      assert(fsck.healthy && fsck.uncommittedFiles == 0 &&
+        fsck.staleGenerations == 0, s"${st.kind}: $fsck")
+      assert(dataFiles(st.dataDir(spark, path)) == before, st.kind)
+      assert(c.read(path) == res, st.kind)
+      assert(st.vacuum(spark, path).uncommittedRemoved == 0,
+        s"${st.kind}: vacuum (repair) stays allowed on a read-only store")
+      ops.SessionScratch.evictTransients()
     }
-    refused(IvfIndex.append(embs.filter(col("vec_id") % 2 === 1), path))
-    refused(IvfIndex.delete(
-      embs.filter(col("vec_id") % 4 === 0).select(col("vec_id")), path))
-    refused(IvfIndex.compact(spark, path))
-    refused(IvfIndex.republish(embs, path, k = 4))
-    // the provenance-bump chokepoint, via its public transform surface
-    val bp = freshDir("ro_bpe")
-    BpeModel.save(spark,
-      Bpe.trainOn(Bpe.wordFreqOf(docs.select(col("text"))), Bpe.Rounds),
-      bp, nTrain = 500)
-    IndexMaintenance.markSharedReadonly(spark, bp, "q180,q230")
-    val eb = intercept[IllegalStateException](
-      BpeModel.noteApplied(spark, bp, 10L))
-    assert(eb.getMessage.contains("read-only") &&
-      eb.getMessage.contains("q180"), eb.getMessage)
-    // the refusals were EARLY: no garbage entered the store, the
-    // config is still live, and the search answers are unchanged
-    val fsck = IvfIndex.fsck(spark, path)
-    assert(fsck.healthy && fsck.uncommittedFiles == 0 &&
-      fsck.staleGenerations == 0)
-    assert(dataFiles(IvfIndex.dataDir(spark, path)) == before)
-    assert(IvfIndex.search(q, path).collect().map(_.toSeq).toSeq ==
-      res.map(_.toSeq).toSeq)
-    assert(IvfIndex.vacuum(spark, path).uncommittedRemoved == 0,
-      "vacuum (repair) stays allowed on a read-only store")
-    ops.SessionScratch.evictTransients()
   }
 
   test("ivfpq auto-remediation cross-checks the raw pair: a diverged " +
