@@ -2,8 +2,6 @@ package graft
 
 import java.nio.file.{Files, Paths}
 
-import org.apache.spark.sql.SparkSession
-
 /** Dev scratch (optimization rounds): dump `.explain("formatted")` for
   * named registry queries to `<outDir>/<name>_<tag>.txt` — the
   * before/after plan evidence the optimization-round deliverable asks
@@ -17,15 +15,7 @@ object PlanDump {
     val outDir = args(1)
     val tag = args(2)
     val names = args.drop(3).toSeq
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = GraftSession.local(GraftSession.envCpus)
     Files.createDirectories(Paths.get(outDir))
     val byName = SparkEntry.registry.map(q => q.name -> q).toMap
     names.foreach { n =>

@@ -1,19 +1,11 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Dev smoke: replicates the driver's t1 check — `entry` on sf0.001 must
   * return rows. Prints the rows so a human can eyeball the flagship query.
   */
 object Smoke {
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.local(4)
     val df = SparkEntry.entry(spark)
     val rows = df.collect()
     println(s"[smoke] entry rows=${rows.length}")

@@ -555,15 +555,15 @@ object CurationDag {
     * BPE training on the even-corpus train split + merge application
     * to the batch's train words.
     */
-  /** The day-2 increment pipeline body, shared by the q187 gate and the
-    * `graft.ScaleDay2` measurement harness: an incoming batch deduped
+  /** The day-2 increment pipeline body of the q187 gate: an incoming
+    * batch deduped
     * against a PERSISTED signature index at `idxPath` (cross-corpus
     * probe + in-batch self-resolution over signatures hashed ONCE),
     * survivors split and quality-scored, train-split survivors encoded
     * by the PERSISTED tokenizer `merges`. The existing corpus is
     * touched ONLY through the index parquet and the Rounds-row model —
     * per-run cost scales with `batch`, never the corpus behind the
-    * index (ScaleDay2 measures exactly that claim).
+    * index (measured in SCALING.md, "Day-2 increment DAG, round 10").
     */
   /** Stage 1 of the day-2 runs (q187/q191): the arriving batch deduped
     * against the persisted signature index — hashed ONCE (the
@@ -860,11 +860,12 @@ object CurationDag {
     * train over the even train split + chained-replace encode of the
     * batch's kept words per doc, and the pack window.
     */
-  /** The complete day-2 pipeline body shared by the q191 gate and the
-    * `graft.ScaleDay2` harness: stages 1-2 via [[day2Survivors]], then
-    * frozen-student keep/drop, frozen-tokenizer per-doc encode, and the
-    * q185 pack window — all over the batch, with the corpus entering
-    * only through `idxPath`, `merges`, and the weight table `w`.
+  /** The complete day-2 pipeline body of the q191 gate: stages 1-2 via
+    * [[day2Survivors]], then frozen-student keep/drop, frozen-tokenizer
+    * per-doc encode, and the q185 pack window — all over the batch, with
+    * the corpus entering only through `idxPath`, `merges`, and the
+    * weight table `w` (measured in SCALING.md, "Day-2 increment DAG,
+    * round 10").
     */
   /** The shared day-2 stage chain over PERSISTED artifacts (q191/q207):
     * probe-index dedup → split → FROZEN-student keep/drop →

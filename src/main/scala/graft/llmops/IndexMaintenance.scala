@@ -780,10 +780,11 @@ object IndexMaintenance {
   // ---- occupancy-constant default k ----------------------------------------
 
   /** Default per-cell occupancy target for [[kFor]] — the value the
-    * ScaleIndex occupancy-constant protocol measured as keeping the
-    * cell-blocked pair space linear in n (SCALING.md round 12: at fixed
-    * k an 8× corpus grows occupancy 8× and the occupancy-bounded costs
-    * quadratically; k∝n restores the pair_space/n invariant).
+    * occupancy-constant protocol measured as keeping the cell-blocked
+    * pair space linear in n (SCALING.md, "Measured, round 12: the
+    * occupancy-constant protocol (k ∝ n)": at fixed k an 8× corpus grows
+    * occupancy 8× and the occupancy-bounded costs quadratically; k∝n
+    * restores the pair_space/n invariant).
     */
   val OccTarget = 256L
 
@@ -1494,30 +1495,32 @@ object IvfIndex extends MaintainedStore("ivf", "ivf_index", "assignments",
     }
   }
 
-  /** Search the MAINTAINED index: the q54 probe shape (top-`nprobe`
-    * cells by exact fixed-point centroid dot, per-query top-`topk` by
-    * exact cosine) with the assignment table read off parquet. The
-    * candidate set per query is |cell|·nprobe, never |corpus|.
+  /** Search the MAINTAINED index: the q54 probe shape (top-
+    * [[Similarity.Nprobe]] cells by exact fixed-point centroid dot,
+    * per-query top-`topk` by exact cosine) with the assignment table
+    * read off parquet. The candidate set per query is |cell|·Nprobe,
+    * never |corpus|.
     */
-  def search(queries: DataFrame, path: String, nprobe: Int = 2,
+  def search(queries: DataFrame, path: String,
       topk: Int = 8): DataFrame = {
     val s = queries.sparkSession
     import s.implicits._
     val centDf = centroids(s, path)
       .map(c => (c.cell, c.centroid.toSeq)).toDF("ccell", "ec")
     Similarity.ivfSearchOver(queries, members(s, path),
-      centDf, nprobe, topk)
+      centDf, topk)
   }
 
   /** SEMANTIC dedup probe against the maintained index — SemDeDup
     * (Abbas et al. 2023, the q156 semantics) at INGEST time: a new
-    * vector is dropped when some INDEXED vector inside its top-`nprobe`
-    * probed cells sits at exact fixed-point cosine >= `tau`. Returns
-    * the surviving rows as (vec_id, cell, n_cand): `cell` is the
-    * top-probed (argmax) cell — where [[dedupIngest]] would file the
-    * vector — and `n_cand` is the number of index members the probe
-    * compared against, so the output hash covers the CANDIDATE SET,
-    * not just the drop decisions (an index that leaked a rejected
+    * vector is dropped when some INDEXED vector inside its top-
+    * [[Similarity.Nprobe]] probed cells sits at exact fixed-point
+    * cosine >= `tau`. Returns the surviving rows as (vec_id, cell,
+    * n_cand): `cell` is the top-probed (argmax) cell — where
+    * [[dedupIngest]] would file the vector — and `n_cand` is the
+    * number of index members the probe compared against, so the
+    * output hash covers the CANDIDATE SET, not just the drop
+    * decisions (an index that leaked a rejected
     * vector shifts a survivor's n_cand even when it flips no drop).
     *
     * Cost shape mirrors [[DedupIndex.probe]]: only the delta is scored
@@ -1528,9 +1531,9 @@ object IvfIndex extends MaintainedStore("ivf", "ivf_index", "assignments",
     * discipline: a double-dot prefilter at a dims-scaled margin, the
     * exact int64 dot only on survivors of it.
     */
-  def semanticProbe(newVecs: DataFrame, path: String, tau: Double = 0.35,
-      nprobe: Int = 2): DataFrame =
-    probeJoined(newVecs, path, tau, nprobe)
+  def semanticProbe(newVecs: DataFrame, path: String,
+      tau: Double = 0.35): DataFrame =
+    probeJoined(newVecs, path, tau)
       .groupBy(col("vec_id"))
       .agg(count(col("member_id")).as("n_cand"),
         max(col("hit")).as("dup"),
@@ -1543,13 +1546,13 @@ object IvfIndex extends MaintainedStore("ivf", "ivf_index", "assignments",
     * empty (LEFT join keeps the vector observable with n_cand = 0).
     */
   private def probeJoined(newVecs: DataFrame, path: String,
-      tau: Double, nprobe: Int): DataFrame = {
+      tau: Double): DataFrame = {
     val s = newVecs.sparkSession
     import s.implicits._
     val centDf = centroids(s, path)
       .map(c => (c.cell, c.centroid.toSeq)).toDF("ccell", "ec")
     val probes = Similarity.probeCells(
-      newVecs.select(col("vec_id"), col("embedding")), centDf, nprobe,
+      newVecs.select(col("vec_id"), col("embedding")), centDf,
       idCol = "vec_id", vecCol = "embedding", keepRank = true)
     val idx = members(s, path)
       .select(col("cell"), col("member_id"), col("em"))
@@ -1571,10 +1574,10 @@ object IvfIndex extends MaintainedStore("ivf", "ivf_index", "assignments",
     * otherwise re-run against the GROWN index and self-match every
     * survivor (dot(v, v) = 1 >= tau).
     */
-  def dedupIngest(newVecs: DataFrame, path: String, tau: Double = 0.35,
-      nprobe: Int = 2): DataFrame = {
+  def dedupIngest(newVecs: DataFrame, path: String,
+      tau: Double = 0.35): DataFrame = {
     val survivors = SessionScratch.transientCheckpoint(
-      semanticProbe(newVecs, path, tau, nprobe))
+      semanticProbe(newVecs, path, tau))
     append(newVecs.join(survivors.select(col("vec_id")),
       Seq("vec_id"), "left_semi"), path)
     survivors
@@ -1618,8 +1621,9 @@ object GraphIndex extends MaintainedStore("graph", "graph_index", "graph",
   /** Lloyd iterations / default out-degree (q198's recipe). The
     * out-degree is the DiskANN/Vamana R parameter — the graph's
     * CONNECTIVITY budget, recorded in the config at build because it
-    * is the knob that actually moves the recall ceiling (ScaleAnn:
-    * beam and rounds both saturate at fixed degree; see SCALING.md).
+    * is the knob that actually moves the recall ceiling (beam and rounds
+    * both saturate at fixed degree — SCALING.md, "Measured, round 12:
+    * the graph-ANN recall ceiling is CONNECTIVITY").
     */
   val Iters = 2
   val Degree = 4
@@ -1805,8 +1809,8 @@ object GraphIndex extends MaintainedStore("graph", "graph_index", "graph",
   /** Search the MAINTAINED graph: q198's unrolled beam walk with
     * members, edges, and entry points read off the verified store.
     */
-  def search(queries: DataFrame, path: String, beam: Int = 4,
-      topk: Int = 8, rounds: Int = 2): DataFrame = {
+  def search(queries: DataFrame, path: String,
+      topk: Int = 8): DataFrame = {
     val s = queries.sparkSession
     requireLive(s, path)
     val data = s.read.parquet(dataDir(s, path))
@@ -1815,10 +1819,9 @@ object GraphIndex extends MaintainedStore("graph", "graph_index", "graph",
         .select(col("member_id").as("vec_id"), col("em").as("embedding")),
       data.filter(col("kind") === "e").select(col("src"), col("dst")),
       s.read.parquet(entDir(path)),
-      beam, topk,
+      topk,
       excludeFromResults =
-        IndexMaintenance.tombstones(s, path, manifestName, what),
-      rounds = rounds)
+        IndexMaintenance.tombstones(s, path, manifestName, what))
   }
 
   /** Drift remediation at the recorded k with the out-degree `degree`
@@ -2075,21 +2078,21 @@ object IvfPqIndex extends MaintainedStore("ivfpq", "ivfpq_index", "codes",
     }
   }
 
-  /** Search the MAINTAINED index by codes alone: top-`nprobe` cells per
-    * query (exact centroid dots against the k-bounded recorded
-    * centroids), candidates = the probed cells' rows in the CODES
-    * store, ranked by the exact int64 ADC sum (m broadcast table
-    * lookups per candidate). No raw corpus vector is read anywhere —
-    * the query's own vector builds the ADC table. Returns
-    * (qid, cid, f, rn).
+  /** Search the MAINTAINED index by codes alone: top-
+    * [[Similarity.Nprobe]] cells per query (exact centroid dots
+    * against the k-bounded recorded centroids), candidates = the
+    * probed cells' rows in the CODES store, ranked by the exact int64
+    * ADC sum (m broadcast table lookups per candidate). No raw corpus
+    * vector is read anywhere — the query's own vector builds the ADC
+    * table. Returns (qid, cid, f, rn).
     */
-  def search(queries: DataFrame, path: String, nprobe: Int = 2,
+  def search(queries: DataFrame, path: String,
       topk: Int = 8): DataFrame = {
     val s = queries.sparkSession
     import s.implicits._
     val centDf = centroids(s, path)
       .map(c => (c.cell, c.centroid.toSeq)).toDF("ccell", "ec")
-    val probes = Similarity.probeCells(queries, centDf, nprobe)
+    val probes = Similarity.probeCells(queries, centDf)
       .select(col("qid"), col("cell"))
     val qd = subOf(queries.select(col("qid").as("vec_id"),
         col("eq").as("embedding")))

@@ -150,7 +150,7 @@ abstract class MaintainedStore(val kind: String, stem: String,
         val actual = IndexMaintenance.listDataFiles(s, s"$path/${m.subdir}")
         FsckReport(what, path, config.isDefined, matches,
           manifestPresent = true, IndexMaintenance.generationOf(m.subdir),
-          m.files.size, m.files.map(_._2).sum,
+          m.files.size, m.files.toSeq.map(_._2).sum,
           (actual -- m.files).size, (m.files -- actual).size,
           IndexMaintenance.staleGenerations(entries, m.subdir).size, temps,
           trainStats)
@@ -160,15 +160,26 @@ abstract class MaintainedStore(val kind: String, stem: String,
   /** THE build commit: refuse a read-only store BEFORE the build
     * overwrites anything, `write` the store's rows into generation 0
     * (returning what the caller records next), then publish the manifest
-    * committing them. The caller writes its config sidecar LAST — the
-    * ingest-complete marker — so a crash anywhere mid-build reads as
+    * committing them and delete the generation it superseded (a rebuild
+    * after a compaction or a frozen-model republish), as
+    * [[swapGeneration]] does. The caller writes its config sidecar LAST —
+    * the ingest-complete marker — so a crash anywhere mid-build reads as
     * missing-config, never as a silently short store.
     */
   protected def buildCommit[T](s: SparkSession, path: String)(
       write: String => T): T = {
     IndexMaintenance.requireMutable(s, path, "build")
-    val out = write(s"$path/$dataBase-g0")
-    IndexMaintenance.publishManifest(s, path, manifestName, s"$dataBase-g0")
+    val sub = s"$dataBase-g0"
+    // only a sibling generation: a damaged manifest naming anything else
+    // (or nothing, i.e. the store root) is never deleted
+    val prior = scala.util.Try(
+      IndexMaintenance.readManifest(s, path, manifestName)).toOption.flatten
+      .map(_.subdir)
+      .filter(d => d != sub &&
+        d == s"$dataBase-g${IndexMaintenance.generationOf(d)}")
+    val out = write(s"$path/$sub")
+    IndexMaintenance.publishManifest(s, path, manifestName, sub)
+    prior.foreach(d => IndexMaintenance.deleteDir(s, s"$path/$d"))
     out
   }
 
@@ -269,20 +280,20 @@ abstract class MaintainedStore(val kind: String, stem: String,
     * read path then fails with the descriptive rebuild error), clears
     * the tombstones (a rebuild indexes exactly the corpus it is handed),
     * then runs `rebuild(recordedConfig)`, whose final config publish puts
-    * the store back online at `-g0`. A post-compaction generation left
-    * behind is then unreferenced garbage and is deleted. Refuses on a
-    * read-only store BEFORE the retraction, which would take it offline.
+    * the store back online at `-g0` ([[buildCommit]] deletes a
+    * post-compaction generation it supersedes). Refuses on a read-only
+    * store, or one whose live generation does not verify, BEFORE the
+    * retraction, which would take it offline.
     */
   protected def retractAndRebuild(s: SparkSession, path: String)(
       rebuild: String => Unit): Unit = {
     requireLive(s, path)
     IndexMaintenance.requireMutable(s, path, "republish")
     val recorded = IndexMaintenance.readSidecar(s, path, configName).get.trim
-    val stale = dataDir(s, path)
+    dataDir(s, path)
     IndexMaintenance.retractSidecar(s, path, configName)
     IndexMaintenance.clearTombstones(s, path, manifestName)
     rebuild(recorded)
-    if (!stale.endsWith(s"/$dataBase-g0")) IndexMaintenance.deleteDir(s, stale)
   }
 }
 
@@ -422,7 +433,8 @@ trait AnnStore extends MaintainedStore {
     * remediation corpus. The corpus is released before the next store —
     * a multi-store sweep otherwise accumulates every corpus in the block
     * manager (measured: 8 acts in one sweep cost 1.6× per store vs one
-    * act per sweep — ScaleIndex `remediation_fanout`).
+    * act per sweep — SCALING.md, "Measured, round 15: multi-store
+    * remediation fan-out").
     */
   private[llmops] override def remediate(s: SparkSession, label: String,
       path: String, before: TrainStats): Unit = {

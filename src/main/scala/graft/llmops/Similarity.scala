@@ -218,7 +218,12 @@ object Similarity {
     * the PERSISTED index ([[IvfIndex]]), whose assignment table comes
     * off parquet instead of a fresh training run.
     */
-  /** Top-`nprobe` cells per query by exact int64 centroid dot (ranking
+  /** The IVF probe width: every IVF-routed read path inspects the top
+    * 2 cells per query, the operating point the gates' oracle SQL pins.
+    */
+  private[llmops] val Nprobe = 2
+
+  /** Top-[[Nprobe]] cells per query by exact int64 centroid dot (ranking
     * on the fixed-point fdot like the oracle's BIGINT ORDER BY — the
     * double form collapses distinct dots at dims ≳ 91; ties → smaller
     * cell). THE probe stage shared by every IVF-routed read path
@@ -229,7 +234,7 @@ object Similarity {
     * is the (ccell, ec) centroid table.
     */
   private[graft] def probeCells(queries: org.apache.spark.sql.DataFrame,
-      centDf: org.apache.spark.sql.DataFrame, nprobe: Int,
+      centDf: org.apache.spark.sql.DataFrame,
       idCol: String = "qid", vecCol: String = "eq",
       keepRank: Boolean = false): org.apache.spark.sql.DataFrame = {
     val wp = Window.partitionBy(col(idCol))
@@ -239,7 +244,7 @@ object Similarity {
       .withColumn("__cdot", graft.functions.VectorDot.fixedDotSum(
         col(vecCol).cast("array<double>"), col("ec")))
       .withColumn("crn", row_number().over(wp))
-      .filter(col("crn") <= nprobe)
+      .filter(col("crn") <= Nprobe)
       .withColumnRenamed("ccell", "cell")
       .drop("ec", "__cdot")
     if (keepRank) ranked else ranked.drop("crn")
@@ -248,8 +253,8 @@ object Similarity {
   private[llmops] def ivfSearchOver(queries: org.apache.spark.sql.DataFrame,
       assigned: org.apache.spark.sql.DataFrame,
       centDf: org.apache.spark.sql.DataFrame,
-      nprobe: Int = 2, topk: Int = 8): org.apache.spark.sql.DataFrame = {
-    val probes = probeCells(queries, centDf, nprobe)
+      topk: Int = 8): org.apache.spark.sql.DataFrame = {
+    val probes = probeCells(queries, centDf)
       .select(col("qid"), col("eq"), col("cell"))
     val w = Window.partitionBy(col("qid"))
       .orderBy(col("sim").desc, col("member_id"))
@@ -1162,7 +1167,7 @@ object Similarity {
   /** IVF-PQ composed ANN — the production FAISS index shape (IndexIVFPQ,
     * Jégou et al. 2011): the two scale levers already proven separately
     * composed into one search path. IVF cells (q53's verified k-means
-    * training) prune WHICH vectors are scored — only the top-`nprobe`
+    * training) prune WHICH vectors are scored — only the top-[[Nprobe]]
     * cells per query are touched; PQ codes (m=4 one-byte codes, 64×
     * compression, codebooks TRAINED per subspace by [[PqCodebook.fit]]
     * — the ProductQuantizer::train half of the FAISS contract, not
@@ -1604,7 +1609,7 @@ object Similarity {
       beamSearch(
         t.embeddings.filter(col("vec_id") < 10)
           .select(col("vec_id").as("qid"), col("embedding").as("eq")),
-        t.embeddings, graph, entries, beam = 4, topk = 8)
+        t.embeddings, graph, entries, topk = 8)
     },
     Some(kmeansTrainCtes(4) + knnGraphCtes() + beamTailSql))
 
@@ -1743,23 +1748,26 @@ object Similarity {
       .select(col("vec_id").as("cid"))
   }
 
+  /** The graph walk's beam width: round 2 of [[beamSearch]] expands
+    * the best 4 visited candidates per query, the operating point the
+    * gates' oracle SQL pins.
+    */
+  private[llmops] val Beam = 4
+
   /** Unrolled best-first beam search over a (src, dst) k-NN graph
-    * from fixed entry points (`rounds` expansion rounds, default 2 —
-    * the gate-pinned operating point; ScaleAnn measures the
-    * recall/latency curve over both `beam` and `rounds`); every
-    * visited candidate competes in the final top-k. The per-round
-    * candidate sets are bounded by |queries|·(entries + Σ beam·degree)
-    * — the graph is touched only through equi-joins on src.
+    * from fixed entry points: round 1 expands the entry points, round 2
+    * the best [[Beam]] visited candidates; every visited candidate
+    * competes in the final top-k. The candidate sets are bounded by
+    * |queries|·(entries + degree·(entries + Beam)) — the graph is
+    * touched only through equi-joins on src.
     */
   private[llmops] def beamSearch(queries: org.apache.spark.sql.DataFrame,
       emb: org.apache.spark.sql.DataFrame,
       graph: org.apache.spark.sql.DataFrame,
       entries: org.apache.spark.sql.DataFrame,
-      beam: Int, topk: Int,
-      excludeFromResults: Option[org.apache.spark.sql.DataFrame] = None,
-      rounds: Int = 2)
+      topk: Int,
+      excludeFromResults: Option[org.apache.spark.sql.DataFrame] = None)
       : org.apache.spark.sql.DataFrame = {
-    require(rounds >= 1, s"beamSearch needs >= 1 expansion round")
     val cand = emb.select(col("vec_id").as("cid"),
       col("embedding").as("ec"))
     def score(v: org.apache.spark.sql.DataFrame)
@@ -1772,27 +1780,20 @@ object Similarity {
     val c0 = queries.crossJoin(broadcast(entries))
     val n1 = c0.join(graph, col("cid") === col("src"))
       .select(col("qid"), col("eq"), col("dst").as("cid"))
-    // each intermediate round's visited set is checkpointed: a later
-    // round's lineage would otherwise re-derive every earlier round
-    // (and the graph) from scratch — the frames are
-    // |queries|·(entries + Σ beam·degree) rows, driver-bounded, and
-    // consumed within this query. Round 1 expands the entry points;
-    // each further round expands the current beam (best-first).
-    var visited = graft.ops.SessionScratch.transientCheckpoint(
+    // round 1's visited set is checkpointed: round 2 reads it twice
+    // (beam selection and the union) and would otherwise re-derive it
+    // and the graph from scratch — the frame is
+    // |queries|·(entries + entries·degree) rows, driver-bounded, and
+    // consumed within this query.
+    val v1 = graft.ops.SessionScratch.transientCheckpoint(
       c0.select(col("qid"), col("eq"), col("cid")).union(n1)
         .filter(col("qid") =!= col("cid")).distinct())
-    for (r <- 2 to rounds) {
-      val b = score(visited).withColumn("rn", row_number().over(w))
-        .filter(col("rn") <= beam)
-      val n = b.join(graph, col("cid") === col("src"))
-        .select(col("qid"), col("eq"), col("dst").as("cid"))
-      val v = visited.union(n)
-        .filter(col("qid") =!= col("cid")).distinct()
-      visited =
-        if (r < rounds) graft.ops.SessionScratch.transientCheckpoint(v)
-        else v
-    }
-    val v2 = visited
+    val b = score(v1).withColumn("rn", row_number().over(w))
+      .filter(col("rn") <= Beam)
+    val n2 = b.join(graph, col("cid") === col("src"))
+      .select(col("qid"), col("eq"), col("dst").as("cid"))
+    val v2 = v1.union(n2)
+      .filter(col("qid") =!= col("cid")).distinct()
     // lazy-delete masking (DiskANN semantics): excluded ids still ROUTE
     // — they enter the visited set, can occupy beam slots, and their
     // edges are expanded — but never occupy a RESULT rank
@@ -2032,7 +2033,7 @@ object Similarity {
         .select(col("member_id").as("qid"), col("em").as("eq"))
       val centDf = IvfIndex.centroids(s, path)
         .map(c => (c.cell, c.centroid.toSeq)).toDF("ccell", "ec")
-      val probes = probeCells(day3, centDf, nprobe = 2)
+      val probes = probeCells(day3, centDf)
       val labeled = m.filter(col("member_id") % 3 =!= 2)
       val labels = t.embeddings
         .select(col("vec_id").as("member_id"), col("label").as("mlabel"))
@@ -2138,8 +2139,10 @@ object Similarity {
 
   /** A graph store through the R-UPGRADE loop: built insert-only at
     * the default R=4, then [[GraphIndex.republish]]ed over the full
-    * corpus at R=8 — the remediation an operator runs when ScaleAnn's
-    * curve shows connectivity (not beam/rounds) binding recall.
+    * corpus at R=8 — the remediation an operator runs when the measured
+    * curve shows connectivity (not beam/rounds) binding recall
+    * (SCALING.md, "Measured, round 12: the graph-ANN recall ceiling is
+    * CONNECTIVITY").
     */
   private[llmops] def existingRepublishedGraphIndex(
       s: org.apache.spark.sql.SparkSession, dir: String): String = {
@@ -2297,7 +2300,7 @@ object Similarity {
         t.embeddings.filter(col("vec_id") < 10)
           .select(col("vec_id").as("qid"), col("embedding").as("eq"),
             col("label").as("qlabel")),
-        centDf, nprobe = 2)
+        centDf)
       val assigned = IvfIndex.members(s, path)
       val labels = t.embeddings
         .select(col("vec_id").as("member_id"), col("label").as("mlabel"))
@@ -2434,7 +2437,7 @@ object Similarity {
       val probes = probeCells(
         t.embeddings.filter(col("vec_id") % 2 === 1)
           .select(col("vec_id").as("qid"), col("embedding").as("eq")),
-        centDf, nprobe = 2)
+        centDf)
       val assigned = IvfIndex.members(s, path)
         .filter(col("member_id") % 2 === 0)
       val labels = t.embeddings.filter(col("vec_id") % 2 === 0)

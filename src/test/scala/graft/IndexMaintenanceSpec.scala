@@ -1251,7 +1251,7 @@ class IndexMaintenanceSpec extends SparkTestBase {
     assert(healthy.configPresent && healthy.configMatches.contains(true))
     assert(healthy.manifestPresent && healthy.generation == 0)
     assert(healthy.committedFiles == dataFiles(dir).size &&
-      healthy.committedBytes == dataFiles(dir).map(_._2).sum)
+      healthy.committedBytes == dataFiles(dir).toSeq.map(_._2).sum)
 
     // torn append: fsck reports what probe() throws on, then points at
     // vacuum as the remediation — and vacuum restores healthy
@@ -1291,6 +1291,23 @@ class IndexMaintenanceSpec extends SparkTestBase {
     assert(!absent.healthy && !absent.manifestPresent &&
       !absent.configPresent && absent.generation == -1 &&
       absent.configMatches.isEmpty)
+  }
+
+  test("fsck: committedBytes sums every committed file, equal lengths " +
+    "included") {
+    import graft.llmops.NgramIndex
+    val path = freshDir("ngram_fsck_bytes")
+    // the same batch three times: three committed files of one length
+    val batch = docs.filter(col("doc_id") % 8 === 1)
+    NgramIndex.build(batch, path)
+    NgramIndex.append(batch, path)
+    NgramIndex.append(batch, path)
+    val files = dataFiles(NgramIndex.dataDir(spark, path)).toSeq
+    assert(files.map(_._2).distinct.size < files.size,
+      s"the fixture must commit files of equal length: $files")
+    val f = NgramIndex.fsck(spark, path)
+    assert(f.healthy && f.committedFiles == files.size &&
+      f.committedBytes == files.map(_._2).sum, f)
   }
 
   test("StoreAudit.audit: one catalog sweep over mixed store kinds " +
