@@ -1078,13 +1078,25 @@ object ExplainAudit {
          |$summary
          |""".stripMargin
     Files.writeString(Paths.get("PLANS.md"),
-      header + "\n" + sections.mkString("\n"))
+      stable(header + "\n" + sections.mkString("\n")))
     checks.foreach { case (label, ok) =>
       println(s"[audit] ${if (ok) "PASS" else "FAIL"} $label")
     }
     spark.stop()
     if (checks.exists(!_._2)) sys.exit(1)
   }
+
+  /** Plan text with its run-specific tokens replaced, so a rerun over
+    * the same code writes the same PLANS.md: expression ids, plan ids,
+    * object hashes and the application id in session scratch paths.
+    * Only the written text is normalised; the checks read raw plans.
+    */
+  private def stable(plan: String): String =
+    plan
+      .replaceAll("#\\d+", "#n")
+      .replaceAll("plan_id=\\d+", "plan_id=n")
+      .replaceAll("(?<=[\\w$])@[0-9a-f]{1,8}\\b", "@hash")
+      .replaceAll("_local-\\d+", "_local-app")
 
   private def planOf(spark: SparkSession,
       byName: Map[String, ops.EngineQuery], sfDir: String,

@@ -1,8 +1,11 @@
 package graft
 
+import java.util.concurrent.{LinkedBlockingQueue, TimeUnit}
 import java.util.concurrent.atomic.{AtomicInteger, AtomicLong}
 
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd, SparkListenerJobStart, SparkListenerStageCompleted}
+import org.apache.spark.sql.execution.QueryExecution
+import org.apache.spark.sql.util.QueryExecutionListener
 
 /** Dev scratch (optimization rounds): break a registry query's wall time
   * into driver-side planning phases vs cluster execution.
@@ -13,9 +16,11 @@ import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd, SparkList
   *  - `build`    — seconds spent inside `q.run` BEFORE the final action
   *                 (includes any eager checkpoints / memoized-ingest work
   *                 the query performs while assembling its frame);
-  *  - `anal/opt/plan` — the final DataFrame's QueryPlanningTracker phase
-  *                 durations (driver-side Catalyst work for the gate
-  *                 action itself);
+  *  - `anal/opt/plan` — QueryPlanningTracker phase durations of the
+  *                 QueryExecution that the `count()` ran (driver-side
+  *                 Catalyst work for the gate action itself), taken
+  *                 from a QueryExecutionListener: `df.queryExecution`
+  *                 is a different, never-executed QueryExecution;
   *  - `jobs/jobWall/taskSum` — Spark job count, summed job wall-clock,
   *                 and summed executor task time across ALL jobs the rep
   *                 triggered (including jobs from eager checkpoints).
@@ -47,6 +52,15 @@ object ProfileQ {
       override def onStageCompleted(s: SparkListenerStageCompleted): Unit =
         taskSum.addAndGet(s.stageInfo.taskMetrics.executorRunTime)
     })
+    // every executed count, in completion order (the bus is async)
+    val counts = new LinkedBlockingQueue[QueryExecution]()
+    spark.listenerManager.register(new QueryExecutionListener {
+      override def onSuccess(funcName: String, qe: QueryExecution,
+          durationNs: Long): Unit =
+        if (funcName == "count") counts.put(qe)
+      override def onFailure(funcName: String, qe: QueryExecution,
+          exception: Exception): Unit = ()
+    })
 
     // warm
     spark.range(10000000L).selectExpr("sum(id)").collect()
@@ -56,19 +70,26 @@ object ProfileQ {
         val t0 = System.nanoTime()
         val df = byName(n).run(spark, sfDir)
         val tBuild = System.nanoTime()
+        val tBuildMs = System.currentTimeMillis()
         val c = ops.SessionScratch.withEvictionDiagnostics(df.count())
         val wall = (System.nanoTime() - t0) / 1e9
-        // phase durations of the LAST execution (the count)
-        val phases = df.queryExecution.tracker.phases
+        // the gate's count is the first one analysed after the build;
+        // counts the build ran itself were analysed before it
+        def isGateCount(qe: QueryExecution): Boolean =
+          qe.tracker.phases.get("analysis").exists(_.startTimeMs >= tBuildMs)
+        val executed = Iterator.continually(counts.poll(10, TimeUnit.SECONDS))
+          .takeWhile(_ != null).find(isGateCount)
+        val phases = executed.map(_.tracker.phases).getOrElse(Map.empty)
         def ph(k: String): Double =
           phases.get(k).map(s => (s.endTimeMs - s.startTimeMs) / 1e3)
             .getOrElse(0.0)
         // give the listener bus a beat to drain
         Thread.sleep(150)
+        counts.clear()
         println(f"[profq] $n rep$rep wall=$wall%.2f " +
           f"build=${(tBuild - t0) / 1e9}%.2f " +
-          f"anal=${ph("analysis")}%.2f opt=${ph("optimization")}%.2f " +
-          f"plan=${ph("planning")}%.2f jobs=${jobs.get} " +
+          f"anal=${ph("analysis")}%.3f opt=${ph("optimization")}%.3f " +
+          f"plan=${ph("planning")}%.3f jobs=${jobs.get} " +
           f"jobWall=${jobWall.get / 1e3}%.2f " +
           f"taskSum=${taskSum.get / 1e3}%.2f rows=$c")
         ops.SessionScratch.evictTransients()

@@ -14,8 +14,8 @@ import org.apache.spark.sql.types._
   * allocation, and BOTH run corpus-sized per invocation on the live
   * search paths (KMeans.assign in q52/q54/q156/q192/q197 and the
   * store builds; PqCodebook.codesOf in q192 and the PQ trainings).
-  * The HOF forms are kept as `*Hof` test references (the
-  * exactDot/exactDotHof discipline).
+  * The HOF forms are kept as test-scope references in
+  * `graft.HofForms` (`bestHof`, `codesOfHof`).
   *
   * Semantics are bit-exact ports — the DuckDB oracles replay every
   * cell assignment and code argmin from the same arithmetic:

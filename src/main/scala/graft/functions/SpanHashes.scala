@@ -12,7 +12,7 @@ import org.apache.spark.sql.types._
   * precomputed token-hash array, in one tight generated loop.
   *
   * Arithmetic mirrored EXACTLY from the composed-builtin form
-  * (`PortableHash.spanHashesWideHof`, kept as the regression reference)
+  * (`graft.HofForms.spanHashesWideHof`, the test-scope reference)
   * and the DuckDB oracle: for window start j and multiplier table
   * m[0..2n) (stream A then stream B, each entry < P),
   *

@@ -976,10 +976,12 @@ object TextIndex extends MaintainedStore("bm25", "text_index", "postings",
     * term frequency and the doc length — the single tokenize pass a
     * doc pays on ingest.
     */
-  private def postingsOf(docs: DataFrame): DataFrame =
+  private[graft] def postingsOf(docs: DataFrame): DataFrame =
     docs
-      .select(col("doc_id"),
-        TextStats.nWords(col("text")).cast("long").as("dl"),
+      // dl before the explode: beside it, Spark re-evaluates it per token
+      .select(col("doc_id"), col("text"),
+        TextStats.nWords(col("text")).cast("long").as("dl"))
+      .select(col("doc_id"), col("dl"),
         explode(PortableHash.tokens(col("text"))).as("w"))
       .filter(col("w") =!= "")
       .groupBy(col("doc_id"), col("dl"), col("w"))

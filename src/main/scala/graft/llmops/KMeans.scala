@@ -70,15 +70,14 @@ object KMeans {
     * dot — a double-converted dot would collapse distinct fdots above
     * 2^53 (dims ≳ 91) and could rank differently from the oracle's
     * BIGINT ORDER BY. The transform runs over k elements (small); each
-    * dot is the native codegen'd FixedDotSum.
+    * dot is the native codegen'd FixedDotSum. [[cost]] reads its fdot,
+    * and the test-scope graft.HofForms.bestHof pins [[assign]]'s native
+    * expression to it (optimization r16: `transform`/`array_max` are
+    * CodegenFallback, and the assignment runs corpus-sized per
+    * invocation on the live IVF search paths).
     */
-  /** HOF reference form of the nearest-centroid pick — kept ONLY as
-    * the test oracle for [[assign]]'s native expression (the
-    * exactDot/exactDotHof discipline, optimization r16): `transform`/
-    * `array_max` are CodegenFallback, and the assignment runs
-    * corpus-sized per invocation on the live IVF search paths.
-    */
-  private def bestStruct(vec: Column, centroids: Seq[Centroid]): Column = {
+  private[graft] def bestStruct(vec: Column,
+      centroids: Seq[Centroid]): Column = {
     val cents = typedLit(centroids.map(c => (c.cell, c.centroid.toSeq)))
     array_max(transform(cents, c =>
       struct(
@@ -87,13 +86,9 @@ object KMeans {
         (-c.getField("_1")).as("neg_cell"))))
   }
 
-  private[graft] def bestHof(vec: Column,
-      centroids: Seq[Centroid]): Column =
-    -bestStruct(vec, centroids).getField("neg_cell")
-
   /** Assign every vector to its nearest centroid — a pure projection
     * (one native codegen'd argmax per row; identical exact fixed-point
-    * dot + smaller-cell tie rule as [[bestHof]], KMeansSpec-pinned).
+    * dot + smaller-cell tie rule as [[bestStruct]], FunctionsSpec-pinned).
     */
   def assign(embeddings: DataFrame, centroids: Seq[Centroid],
       idCol: String = "vec_id", vecCol: String = "embedding"): DataFrame = {

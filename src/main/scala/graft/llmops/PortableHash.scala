@@ -75,21 +75,12 @@ object PortableHash {
     * similarity semantics and documented as part of the operator contract.
     *
     * Implemented by the native codegen'd [[graft.functions.FixedDotSum]]
-    * (the HOF form [[exactDotHof]] is CodegenFallback — interpreted
-    * per-element lambdas made the dot product the CPU bottleneck of the
-    * whole similarity family).
+    * (the HOF form, graft.HofForms.exactDotHof in test scope, is
+    * CodegenFallback — interpreted per-element lambdas made the dot
+    * product the CPU bottleneck of the whole similarity family).
     */
   def exactDot(a: Column, b: Column): Column =
     (graft.functions.VectorDot.fixedDotSum(a, b)
-      .cast(DoubleType) / lit(FixedScale * FixedScale))
-
-  /** HOF reference formulation of [[exactDot]] — kept for the regression
-    * spec that pins the native expression to the composed-builtin math.
-    */
-  def exactDotHof(a: Column, b: Column): Column =
-    (aggregate(
-      zip_with(a, b, (x, y) => fixedPoint(x) * fixedPoint(y)),
-      lit(0L), (acc, v) => acc + v)
       .cast(DoubleType) / lit(FixedScale * FixedScale))
 
   /** Fast double dot product — order-dependent, so NOT oracle-safe for
@@ -111,12 +102,6 @@ object PortableHash {
     */
   def dotEps(vec: Column): Column =
     greatest(lit(1e-3), size(vec).cast(DoubleType) * lit(3e-7))
-
-  /** HOF reference formulation of [[fastDot]] (regression spec). */
-  def fastDotHof(a: Column, b: Column): Column =
-    aggregate(
-      zip_with(a, b, (x, y) => x.cast(DoubleType) * y.cast(DoubleType)),
-      lit(0.0), (acc, v) => acc + v)
 
   /** Whitespace tokens of trimmed text (mirrors DuckDB
     * `string_split(trim(text), ' ')`).
@@ -166,23 +151,13 @@ object PortableHash {
   /** All n-token span hashes of a token array (1 per start position);
     * empty for arrays shorter than n. Computed by the native codegen'd
     * [[graft.functions.SpanHashesMod]] — the HOF form
-    * ([[spanHashesHof]], kept as the pin reference) is CodegenFallback
-    * and its per-span interpreted lambdas dominated the span family's
-    * runtime.
+    * (graft.HofForms.spanHashesHof, the test-scope pin reference) is
+    * CodegenFallback and its per-span interpreted lambdas dominated the
+    * span family's runtime.
     */
   def spanHashes(ths: Column, n: Int): Column =
     graft.functions.SpanHashesWide.spanHashesMod(ths,
       typedLit((0 until n).map(d => multConst(d + 1))))
-
-  /** Composed-builtin reference form of [[spanHashes]] (pin test). The
-    * guard matters: Spark's `sequence(1, size-n+1)` DESCENDS through 0
-    * when size < n, and element_at(_, 0) throws — same hazard
-    * charHash guards against.
-    */
-  def spanHashesHof(ths: Column, n: Int): Column =
-    when(size(ths) < n, array().cast("array<bigint>"))
-      .otherwise(transform(sequence(lit(1), size(ths) - (n - 1)),
-        i => spanHash(ths, i, n)))
 
   /** DuckDB rendering of [[spanHash]] over list column `ths` and loop
     * variable `i` — identical per-term-reduced arithmetic.
@@ -214,17 +189,6 @@ object PortableHash {
         (0 until n).map(d => multConst(d + 1 + 32)))
     graft.functions.SpanHashesWide.spanHashesWide(ths, mults)
   }
-
-  /** Composed-builtin reference form of [[spanHashesWide]] — kept for
-    * the FunctionsSpec pin that locks the native codegen expression to
-    * this arithmetic (the exactDotHof discipline). HOFs are
-    * CodegenFallback, so the hot path uses the native form.
-    */
-  def spanHashesWideHof(ths: Column, n: Int): Column =
-    when(size(ths) < n, array().cast("array<bigint>"))
-      .otherwise(transform(sequence(lit(1), size(ths) - (n - 1)),
-        i => spanHash(ths, i, n) * lit(1073741824L) +
-          spanHash(ths, i, n, off = 32)))
 
   /** DuckDB rendering of one [[spanHashesWide]] fingerprint at loop
     * variable `i`.

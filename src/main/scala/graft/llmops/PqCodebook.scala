@@ -53,7 +53,7 @@ object PqCodebook {
     // are dense 0..cb-1 by the fit/seed contracts, letting the
     // codebook ride along as ONE flat int64 literal in (s, cw, pi)
     // order. Identical exact int64 squared-L2 + smaller-cw tie rule
-    // ([[codesOfHof]] is the pinned test reference).
+    // (graft.HofForms.codesOfHof is the pinned test reference).
     val cws = cbRows.map(_.cw).distinct.sorted
     val cb = cws.size
     require(cws == (0L until cb.toLong),
@@ -66,32 +66,6 @@ object PqCodebook {
         s"codesOf: codebook missing component (s=$s, cw=$cw, pi=$pi)"))
     graft.functions.PqEncodeCodes.pqEncodeCodes(vec, typedLit(flat),
       m, subDim)
-  }
-
-  /** HOF reference form of [[codesOf]] — kept ONLY as the test oracle
-    * for the native expression (the exactDot/exactDotHof discipline).
-    */
-  private[graft] def codesOfHof(vec: Column, cbRows: Seq[Codeword], m: Int,
-      subDim: Int): Column = {
-    // bySub(s) = [(cw, [fc by pi])...] sorted by cw
-    val bySub: Seq[Seq[(Long, Seq[Long])]] = (0 until m).map { s =>
-      cbRows.filter(_.cs == s).groupBy(_.cw).toSeq.sortBy(_._1)
-        .map { case (cw, rows) => (cw, rows.sortBy(_.cpi).map(_.fc)) }
-    }
-    val cbLit = typedLit(bySub)
-    transform(sequence(lit(0), lit(m - 1)), s => {
-      val fsub = transform(slice(vec, s * lit(subDim) + 1, lit(subDim)),
-        v => PortableHash.fixedPoint(v))
-      // struct(-d, -cw) max = smallest distance, tie → smallest cw;
-      // |d| <= cb·subDim·(2e7)^2 ≈ 2^62/720 — int64-safe to negate
-      val best = array_max(transform(element_at(cbLit, s + 1), c =>
-        struct(
-          (-aggregate(
-            zip_with(fsub, c.getField("_2"), (a, b) => (a - b) * (a - b)),
-            lit(0L), (acc, x) => acc + x)).as("negd"),
-          (-c.getField("_1")).as("negcw"))))
-      -best.getField("negcw")
-    })
   }
 
   /** Train m per-subspace codebooks of cb codewords with `iters` Lloyd

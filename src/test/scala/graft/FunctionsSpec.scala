@@ -102,9 +102,9 @@ class FunctionsSpec extends SparkTestBase {
     val both = a.crossJoin(b).filter(col("ia") < col("ib")).limit(500)
       .select(
         PortableHash.exactDot(col("ea"), col("eb")).as("exact_native"),
-        PortableHash.exactDotHof(col("ea"), col("eb")).as("exact_hof"),
+        HofForms.exactDotHof(col("ea"), col("eb")).as("exact_hof"),
         PortableHash.fastDot(col("ea"), col("eb")).as("fast_native"),
-        PortableHash.fastDotHof(col("ea"), col("eb")).as("fast_hof"))
+        HofForms.fastDotHof(col("ea"), col("eb")).as("fast_hof"))
       .collect()
     assert(both.nonEmpty)
     both.foreach { r =>
@@ -221,7 +221,7 @@ class FunctionsSpec extends SparkTestBase {
         Seq(8, 16, 32).foreach { n =>
           val rows = ths.select(
               PortableHash.spanHashesWide(col("ths"), n).as("nat"),
-              PortableHash.spanHashesWideHof(col("ths"), n).as("ref"))
+              HofForms.spanHashesWideHof(col("ths"), n).as("ref"))
             .collect()
           assert(rows.length == 200)
           rows.foreach { r =>
@@ -239,7 +239,7 @@ class FunctionsSpec extends SparkTestBase {
         Seq(2, 3).foreach { n =>
           val rows = ths.select(
               PortableHash.spanHashes(col("ths"), n).as("nat"),
-              PortableHash.spanHashesHof(col("ths"), n).as("ref"))
+              HofForms.spanHashesHof(col("ths"), n).as("ref"))
             .collect()
           rows.foreach { r =>
             assert(r.getSeq[Long](0) == r.getSeq[Long](1),
@@ -251,7 +251,7 @@ class FunctionsSpec extends SparkTestBase {
     // shorter-than-span arrays yield EMPTY (not null) on all forms
     val short = Seq(Seq(1L, 2L, 3L)).toDF("ths")
       .select(PortableHash.spanHashesWide(col("ths"), 8).as("nat"),
-        PortableHash.spanHashesWideHof(col("ths"), 8).as("ref"),
+        HofForms.spanHashesWideHof(col("ths"), 8).as("ref"),
         PortableHash.spanHashes(col("ths"), 8).as("nar"))
       .head()
     assert(short.getSeq[Long](0).isEmpty && short.getSeq[Long](1).isEmpty &&
@@ -263,7 +263,7 @@ class FunctionsSpec extends SparkTestBase {
     val nullElem = spark
       .sql("SELECT array(1L, cast(null AS bigint), 3L, 4L) AS ths")
       .select(PortableHash.spanHashesWide(col("ths"), 2).as("nat"),
-        PortableHash.spanHashesWideHof(col("ths"), 2).as("ref"))
+        HofForms.spanHashesWideHof(col("ths"), 2).as("ref"))
       .head()
     assert(nullElem.isNullAt(0), "native should null the whole row")
     assert(nullElem.getSeq[Any](1).take(2).forall(_ == null) &&
@@ -549,7 +549,7 @@ class FunctionsSpec extends SparkTestBase {
       try {
         val rows = KMeans.assign(emb, cents)
           .select(col("cell"),
-            KMeans.bestHof(col("embedding").cast("array<double>"), cents)
+            HofForms.bestHof(col("embedding").cast("array<double>"), cents)
               .cast("long").as("ref"))
           .collect()
         assert(rows.nonEmpty)
@@ -593,7 +593,7 @@ class FunctionsSpec extends SparkTestBase {
         val got = emb.select(
             PqCodebook.codesOf(col("embedding").cast("array<double>"),
               rowsTied, m, subDim).as("nat"),
-            PqCodebook.codesOfHof(col("embedding").cast("array<double>"),
+            HofForms.codesOfHof(col("embedding").cast("array<double>"),
               rowsTied, m, subDim).as("ref"))
           .collect()
         assert(got.nonEmpty)

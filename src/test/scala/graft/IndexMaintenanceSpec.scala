@@ -238,6 +238,68 @@ class IndexMaintenanceSpec extends SparkTestBase {
     assert(plan.contains("In(w, ["), s"term filter must push:\n$plan")
   }
 
+  /** The fixture corpus plus edge documents: blank, all-space, leading
+    * and trailing spaces, and runs of spaces.
+    */
+  private def postingsCorpus = {
+    import spark.implicits._
+    val edges = Seq("", "   ", "  lead", "trail  ", "a  b", " x  y   z ",
+      "solo").zipWithIndex.map { case (t, i) => (1000000L + i, t) }
+      .toDF("doc_id", "text")
+    docs.select(col("doc_id"), col("text")).unionByName(edges)
+  }
+
+  test("TextIndex.postingsOf: every (tf, dl) equals a per-document Scala " +
+    "count; dl is nWords, so runs of spaces count but post nothing") {
+    import graft.llmops.TextIndex
+    val corpus = postingsCorpus.collect()
+      .map(r => r.getLong(0) -> r.getString(1))
+    // Spark's trim and split(_, " ") act on ASCII spaces only
+    def trimSpaces(s: String) = s.dropWhile(_ == ' ').reverse
+      .dropWhile(_ == ' ').reverse
+    val want = corpus.collect { case (id, text) if text != null =>
+      val t = trimSpaces(text)
+      val dl = if (t.isEmpty) 0L else t.count(_ == ' ') + 1L
+      t.split(" ", -1).filter(_.nonEmpty).groupBy(identity).toSeq
+        .map { case (w, ws) => (id, w, ws.length.toLong, dl) }
+    }.flatten.sorted.toSeq
+    val got = TextIndex.postingsOf(postingsCorpus).collect()
+      .map(r => (r.getLong(0), r.getString(1), r.getLong(2), r.getLong(3)))
+      .sorted.toSeq
+    assert(got == want)
+    val byDoc = got.groupBy(_._1)
+    // "a  b": dl 3 (two spaces + 1), but only the two non-empty tokens
+    assert(byDoc(1000004L).map(p => (p._2, p._3, p._4)).toSet ==
+      Set(("a", 1L, 3L), ("b", 1L, 3L)))
+    assert(byDoc(1000005L).map(_._4).toSet == Set(6L))
+    assert(byDoc(1000002L).map(p => (p._2, p._4)) == Seq(("lead", 1L)))
+    assert(byDoc(1000003L).map(p => (p._2, p._4)) == Seq(("trail", 1L)))
+    // blank and all-space documents have dl 0 and no postings at all
+    assert(!byDoc.contains(1000000L) && !byDoc.contains(1000001L))
+  }
+
+  test("TextIndex.postingsOf: dl is projected once per document below " +
+    "the explode, and nothing above the Generate reads the text") {
+    import org.apache.spark.sql.catalyst.expressions.RegExpReplace
+    import org.apache.spark.sql.catalyst.plans.logical.{Generate,
+      LogicalPlan, Project}
+    val plan = graft.llmops.TextIndex.postingsOf(postingsCorpus)
+      .queryExecution.optimizedPlan
+    val gens = plan.collect { case g: Generate => g }
+    assert(gens.size == 1, s"one explode expected:\n$plan")
+    val below = gens.head.child.collect { case p: Project => p }
+    assert(below.exists(_.projectList.exists(
+      _.find(_.isInstanceOf[RegExpReplace]).isDefined)),
+      s"the dl Project (regexp_replace) must sit below the Generate:\n$plan")
+    def above(p: LogicalPlan): Seq[LogicalPlan] = p match {
+      case _: Generate => Nil
+      case other => other +: other.children.flatMap(above)
+    }
+    val readsText = above(plan).filter(_.references.exists(_.name == "text"))
+    assert(readsText.isEmpty,
+      s"no node above the Generate may reference text:\n$plan")
+  }
+
   /** Exact top-k neighbor ids per query by fixed-point cosine — the
     * ground truth for recall.
     */

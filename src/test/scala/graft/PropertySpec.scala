@@ -40,7 +40,7 @@ class PropertySpec extends SparkTestBase {
           (x, y) => PortableHash.fixedPoint(x) * PortableHash.fixedPoint(y)),
         lit(0L), (acc, v) => acc + v).as("hof_fixed"),
       VectorDot.doubleDot(col("a"), col("b")).as("native_dbl"),
-      PortableHash.fastDotHof(col("a"), col("b")).as("hof_dbl"))
+      HofForms.fastDotHof(col("a"), col("b")).as("hof_dbl"))
     df.collect().foreach { r =>
       val id = r.getLong(0)
       assert(r.isNullAt(1) == r.isNullAt(2), s"row $id fixed null drift")
