@@ -1,6 +1,5 @@
 package graft.etl
 
-import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.SparkSession
 
 /** Small-file compaction — the housekeeping operator every long-lived
@@ -30,16 +29,7 @@ object Compaction {
   def targetFiles(spark: SparkSession, inDir: String,
       targetBytes: Long): (Int, Int) = {
     require(targetBytes > 0, s"targetBytes must be positive: $targetBytes")
-    val in = new Path(inDir)
-    val fs = in.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    def walk(p: Path): Seq[org.apache.hadoop.fs.FileStatus] =
-      fs.listStatus(p).toSeq.flatMap { st =>
-        val name = st.getPath.getName
-        if (name.startsWith("_") || name.startsWith(".")) Nil
-        else if (st.isDirectory) walk(st.getPath)
-        else Seq(st)
-      }
-    val files = walk(in)
+    val files = ParquetDir.dataFiles(spark, inDir)
     val bySize = math.ceil(files.map(_.getLen).sum.toDouble / targetBytes)
     (files.length, math.max(1, math.min(files.length.toDouble, bySize).toInt))
   }
@@ -51,7 +41,7 @@ object Compaction {
   def compact(spark: SparkSession, inDir: String, outDir: String,
       targetBytes: Long): (Int, Int) = {
     val (before, n) = targetFiles(spark, inDir, targetBytes)
-    spark.read.parquet(inDir)
+    ParquetDir.read(spark, inDir)
       .repartition(n)
       .write.mode("overwrite").parquet(outDir)
     (before, n)

@@ -66,7 +66,7 @@ final class EtlRunner(spark: SparkSession, resolve: String => DataFrame,
       .option("partitionOverwriteMode", "dynamic")
     (if (spec.partitionBy.nonEmpty) writer.partitionBy(spec.partitionBy: _*)
      else writer).parquet(path)
-    spark.read.parquet(path)
+    ParquetDir.read(spark, path)
   }
 
   def run(spec: EtlSpec): DataFrame =

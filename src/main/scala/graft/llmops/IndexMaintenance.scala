@@ -3,6 +3,7 @@ package graft.llmops
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.etl.ParquetDir
 import graft.ops.SessionScratch
 
 /** PERSISTED, INCREMENTALLY-MAINTAINED index artifacts for the two
@@ -43,25 +44,53 @@ object IndexMaintenance {
 
   /** Atomic sidecar publish: write-to-temp + rename (the
     * Layout.zorderWrite discipline) — the sidecar either exists
-    * complete or not at all. The rename is an overwrite-capable
-    * FileContext rename, so RE-publishing over an existing sidecar is
-    * one atomic replace too (a delete-then-rename would open a crash
+    * complete or not at all, and RE-publishing over an existing sidecar
+    * is one atomic replace too (a delete-then-rename would open a crash
     * window where the index has valid data but no sidecar, forcing a
-    * spurious full rebuild).
+    * spurious full rebuild). The temp is `.<name>.tmp.<uuid>`, the name
+    * [[orphanedTemps]] sweeps after a crash.
+    *
+    * On the local filesystem the publish is a `java.nio` write and one
+    * `rename(2)` over the destination: without the native Hadoop library,
+    * Hadoop's create and FileContext rename fork `chmod` and `readlink`
+    * processes, 10 per publish (SCALING.md, "the manifest discipline's
+    * hidden metadata costs"). A stale `.<name>.crc` sibling from an
+    * earlier Hadoop write is deleted BEFORE the rename: the checksummed
+    * open would verify the new body against it, while a sidecar with no
+    * checksum file reads unverified. Other schemes keep the
+    * overwrite-capable FileContext rename ([[publishViaFileContext]]).
     */
   private[graft] def writeSidecar(s: SparkSession, dir: String,
       name: String, content: String): Unit = {
     val conf = s.sparkContext.hadoopConfiguration
     val p = new org.apache.hadoop.fs.Path(dir, name)
-    val tmp = new org.apache.hadoop.fs.Path(dir,
-      s".$name.tmp.${java.util.UUID.randomUUID()}")
     val fs = p.getFileSystem(conf)
+    val tmpName = s".$name.tmp.${java.util.UUID.randomUUID()}"
+    val bytes = content.getBytes("UTF-8")
+    if (fs.getUri.getScheme == "file") {
+      import java.nio.file.{Files, Paths, StandardCopyOption}
+      val dest = Paths.get(fs.makeQualified(p).toUri)
+      val parent = Files.createDirectories(dest.getParent)
+      val tmp = Files.write(parent.resolve(tmpName), bytes)
+      Files.deleteIfExists(parent.resolve(s".$name.crc"))
+      Files.move(tmp, dest, StandardCopyOption.ATOMIC_MOVE,
+        StandardCopyOption.REPLACE_EXISTING)
+    } else publishViaFileContext(fs, new org.apache.hadoop.fs.Path(dir,
+      tmpName), p, bytes)
+  }
+
+  /** [[writeSidecar]]'s publish for filesystems other than the local
+    * one: Hadoop create of the temp, then an OVERWRITE FileContext
+    * rename onto `p`.
+    */
+  private[graft] def publishViaFileContext(
+      fs: org.apache.hadoop.fs.FileSystem, tmp: org.apache.hadoop.fs.Path,
+      p: org.apache.hadoop.fs.Path, bytes: Array[Byte]): Unit = {
     val out = fs.create(tmp, true)
-    try out.write(content.getBytes("UTF-8"))
+    try out.write(bytes)
     finally out.close()
-    val fc = org.apache.hadoop.fs.FileContext.getFileContext(
-      fs.getUri, conf)
-    fc.rename(tmp, p, org.apache.hadoop.fs.Options.Rename.OVERWRITE)
+    org.apache.hadoop.fs.FileContext.getFileContext(fs.getUri, fs.getConf)
+      .rename(tmp, p, org.apache.hadoop.fs.Options.Rename.OVERWRITE)
   }
 
   /** Delete a sidecar — the RETRACTION half of the publish protocol:
@@ -344,7 +373,7 @@ object IndexMaintenance {
       .distinct()
     val newIds = committed match {
       case Some(_) =>
-        val existing = s.read.parquet(cur).select(col("id").as("__tomb_id"))
+        val existing = ParquetDir.read(s, cur).select(col("id").as("__tomb_id"))
         distinctIds.join(existing,
           distinctIds("id") === existing("__tomb_id"), "left_anti")
       case None => distinctIds
@@ -375,7 +404,7 @@ object IndexMaintenance {
       manifestName: String, what: String): Option[DataFrame] = {
     val tn = tombManifest(manifestName)
     readSidecar(s, path, tn).map { _ =>
-      s.read.parquet(verifiedDir(s, path, tn, s"$what tombstones"))
+      ParquetDir.read(s, verifiedDir(s, path, tn, s"$what tombstones"))
         .select(col("id"))
     }
   }
@@ -872,7 +901,7 @@ object DedupIndex extends MaintainedStore("dedup", "dedup_index",
     */
   def signatures(s: SparkSession, path: String): DataFrame = {
     requireLive(s, path)
-    masked(s, path, s.read.parquet(dataDir(s, path)))
+    masked(s, path, ParquetDir.read(s, dataDir(s, path)))
   }
 
   /** DELETE docs from the index (takedowns, opt-outs): tombstones — every
@@ -1103,7 +1132,7 @@ object TextIndex extends MaintainedStore("bm25", "text_index", "postings",
     */
   def postings(s: SparkSession, path: String): DataFrame = {
     requireLive(s, path)
-    masked(s, path, s.read.parquet(dataDir(s, path)))
+    masked(s, path, ParquetDir.read(s, dataDir(s, path)))
   }
 
   /** MAINTENANCE: tokenize ONLY the new docs, append their postings,
@@ -1247,7 +1276,7 @@ object NgramIndex extends MaintainedStore("ngram", "ngram_index", "counts",
     */
   def lm(s: SparkSession, path: String): DataFrame = {
     requireLive(s, path)
-    merged(s.read.parquet(dataDir(s, path)))
+    merged(ParquetDir.read(s, dataDir(s, path)))
   }
 
   /** DELETE docs from the model — the LSM ANTI-RECORD: the additive
@@ -1329,7 +1358,7 @@ object BpeModel extends MaintainedStore("bpe", "bpe_model", "merges",
   def load(s: SparkSession, path: String): Seq[Bpe.Merge] = {
     requireLive(s, path)
     import s.implicits._
-    val ms = s.read.parquet(dataDir(s, path)).as[Bpe.Merge].collect()
+    val ms = ParquetDir.read(s, dataDir(s, path)).as[Bpe.Merge].collect()
       .sortBy(_.merge_rank).toSeq
     if (ms.map(_.merge_rank) != (1L to Bpe.Rounds.toLong))
       throw new IllegalStateException(
@@ -1378,7 +1407,7 @@ object ClfModel extends MaintainedStore("clf", "clf_model", "weights",
     */
   def load(s: SparkSession, path: String): DataFrame = {
     requireLive(s, path)
-    val w = s.read.parquet(dataDir(s, path)).select(col("b"), col("w"))
+    val w = ParquetDir.read(s, dataDir(s, path)).select(col("b"), col("w"))
     val bad = w.filter(col("b") < 0 ||
       col("b") > Curation.ClfBuckets).count()
     val dup = w.groupBy(col("b")).count().filter(col("count") > 1).count()
@@ -1425,7 +1454,7 @@ object IvfIndex extends MaintainedStore("ivf", "ivf_index", "assignments",
     * bypasses deletes and is reserved for specs/harnesses.
     */
   def members(s: SparkSession, path: String): DataFrame =
-    masked(s, path, s.read.parquet(dataDir(s, path)))
+    masked(s, path, ParquetDir.read(s, dataDir(s, path)))
 
   protected def remediationCorpus(s: SparkSession, label: String,
       path: String): DataFrame =
@@ -1667,7 +1696,7 @@ object GraphIndex extends MaintainedStore("graph", "graph_index", "graph",
     */
   def members(s: SparkSession, path: String): DataFrame =
     masked(s, path,
-      s.read.parquet(dataDir(s, path)).filter(col("kind") === "m")
+      ParquetDir.read(s, dataDir(s, path)).filter(col("kind") === "m")
         .select(col("member_id"), col("cell"), col("em")))
 
   protected def remediationCorpus(s: SparkSession, label: String,
@@ -1762,7 +1791,7 @@ object GraphIndex extends MaintainedStore("graph", "graph_index", "graph",
         KMeans.assign(newVecs, cents)
           .select(col("vec_id").as("member_id"), col("cell"),
             col("embedding").as("em")))
-      val members = s.read.parquet(cur).filter(col("kind") === "m")
+      val members = ParquetDir.read(s, cur).filter(col("kind") === "m")
         .select(col("member_id"), col("cell"), col("em"))
       // per-src top-Degree via the exact-int64 TopK aggregator — the
       // knnGraphOf shuffle-reduction (map-side prune to Degree rows per
@@ -1788,7 +1817,7 @@ object GraphIndex extends MaintainedStore("graph", "graph_index", "graph",
       // an island unreachable from the entries), and deriving it from
       // the cheap distinct-cells anti-join keeps the expensive scored
       // pair join out of the stray lineage entirely.
-      val entries = s.read.parquet(entDir(path))
+      val entries = ParquetDir.read(s, entDir(path))
       val strayCells = newM.select(col("cell")).distinct()
         .join(members.select(col("cell")).distinct(), Seq("cell"),
           "left_anti")
@@ -1815,12 +1844,12 @@ object GraphIndex extends MaintainedStore("graph", "graph_index", "graph",
       topk: Int = 8): DataFrame = {
     val s = queries.sparkSession
     requireLive(s, path)
-    val data = s.read.parquet(dataDir(s, path))
+    val data = ParquetDir.read(s, dataDir(s, path))
     Similarity.beamSearch(queries,
       data.filter(col("kind") === "m")
         .select(col("member_id").as("vec_id"), col("em").as("embedding")),
       data.filter(col("kind") === "e").select(col("src"), col("dst")),
-      s.read.parquet(entDir(path)),
+      ParquetDir.read(s, entDir(path)),
       topk,
       excludeFromResults =
         IndexMaintenance.tombstones(s, path, manifestName, what))
@@ -1920,7 +1949,7 @@ object IvfPqIndex extends MaintainedStore("ivfpq", "ivfpq_index", "codes",
     * broadcast-tier by construction.
     */
   private def codebook(s: SparkSession, path: String): DataFrame =
-    s.read.parquet(cbDir(path))
+    ParquetDir.read(s, cbDir(path))
       .select(col("cw"), col("cs"), col("cpi"), col("fc"))
 
   /** The recorded codebook as driver rows (m·cb·subDim — bounded by
@@ -2103,7 +2132,7 @@ object IvfPqIndex extends MaintainedStore("ivfpq", "ivfpq_index", "codes",
       .groupBy(col("vec_id").as("aqid"), col("s").as("qs"),
         col("cw").as("qcw"))
       .agg(sum(col("fv") * col("fc")).as("qdot"))
-    val codes = masked(s, path, s.read.parquet(dataDir(s, path)))
+    val codes = masked(s, path, ParquetDir.read(s, dataDir(s, path)))
     val w = org.apache.spark.sql.expressions.Window
       .partitionBy(col("qid")).orderBy(col("f").desc, col("cid"))
     probes.join(codes, Seq("cell"))

@@ -120,7 +120,6 @@ object KMeans {
     import spark.implicits._
 
     var nTrain = -1L
-    val dims = embeddings.select(size(col(vecCol))).head().getInt(0)
 
     // deterministic seed: the first k vectors by id (kmeans|| would
     // sample at scale — seeded runs must be reproducible here)
@@ -139,6 +138,14 @@ object KMeans {
       s"KMeans.fit(k=$k) found only ${centroids.size} training " +
         "vectors — the corpus has fewer rows than k; lower k (or use " +
         "the auto-k builders, which floor at 4) or grow the corpus.")
+    // the dimension comes from the seeds just collected (no separate
+    // action); a ragged corpus fails here, not at an arbitrary row's size
+    val lens = centroids.map(c => Option(c.centroid).fold(-1)(_.length))
+    val dims = lens.headOption.getOrElse(0)
+    require(dims >= 0 && lens.forall(_ == dims),
+      s"KMeans.fit(k=$k): the seed vectors have lengths " +
+        s"${lens.distinct.mkString(", ")} (-1 = NULL) — every embedding " +
+        "must be a non-NULL vector of one length.")
 
     for (_ <- 0 until iters) {
       // update step: exact fixed-point sums per (cell, dimension) in one

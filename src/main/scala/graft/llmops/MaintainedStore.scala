@@ -3,6 +3,7 @@ package graft.llmops
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.etl.ParquetDir
 import graft.ops.SessionScratch
 import IndexMaintenance.{FsckReport, TrainStats, VacuumReport}
 
@@ -261,7 +262,7 @@ abstract class MaintainedStore(val kind: String, stem: String,
         case None => graft.etl.Compaction.compact(s, cur, next, targetBytes)
         case Some(m) =>
           val n = graft.etl.Compaction.targetFiles(s, cur, targetBytes)._2
-          m(s.read.parquet(cur)).repartition(n)
+          m(ParquetDir.read(s, cur)).repartition(n)
             .write.mode("overwrite").parquet(next)
       }
     }
@@ -375,7 +376,7 @@ trait AnnStore extends MaintainedStore {
     import s.implicits._
     requireLive(s, path)
     val k = recordedK(s, path)
-    val cents = s.read.parquet(centDir(path))
+    val cents = ParquetDir.read(s, centDir(path))
       .select(col("cell"), col("centroid"))
       .as[(Long, Seq[Double])]
       .collect()
@@ -548,7 +549,7 @@ trait FrozenModel[M] extends MaintainedStore {
           "retrained from its own table; record the training corpus " +
           "(recordTrainSource) or republish it caller-driven with the " +
           "training rows."))
-    val train = s.read.parquet(src).where(expr(where))
+    val train = ParquetDir.read(s, src).where(expr(where))
     val model = retrain(s, train)
     republish(s, model, path, nTrain = train.count())
     release(model)

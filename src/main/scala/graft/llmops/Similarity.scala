@@ -1604,7 +1604,7 @@ object Similarity {
           .collect().map(_.getLong(0)).toSeq
         (gdir, ids)
       }
-      val graph = s.read.parquet(graphDir)
+      val graph = graft.etl.ParquetDir.read(s, graphDir)
       val entries = entryIds.toDF("cid")
       beamSearch(
         t.embeddings.filter(col("vec_id") < 10)

@@ -180,6 +180,82 @@ class EtlRunnerSpec extends SparkTestBase {
     assert(spark.read.parquet(s"$base/out").count() == all)
   }
 
+  test("committed read: EtlRunner.load re-reads appended and dynamically " +
+      "overwritten partitioned targets with the inferred schema and adds " +
+      "no Spark job to the write") {
+    val wh = java.nio.file.Files.createTempDirectory("etl_read").toString
+    val r = runner(wh)
+    val src = Tables(spark, sfDir).orders
+      .select("o_orderkey", "o_totalprice", "o_orderstatus")
+    val part = Seq("o_orderstatus")
+    for ((mode, i) <- Seq("overwrite", "append", "overwrite").zipWithIndex) {
+      val spec = LoadSpec("p_read", mode, partitionBy = part)
+      // the same write alone, into a sibling target
+      val (_, writeJobs) = jobsStartedBy(
+        src.write.mode(mode).option("partitionOverwriteMode", "dynamic")
+          .partitionBy(part: _*).parquet(s"$wh/p_write_$i"))
+      val (loaded, loadJobs) = jobsStartedBy(r.load(src, spec))
+      assert(loadJobs == writeJobs,
+        s"$mode: load started $loadJobs jobs, its write alone $writeJobs")
+      val target = s"$wh/p_read"
+      val inferred = spark.read.parquet(target).schema
+      assert(loaded.schema == inferred, mode)
+      assert(inferred.last.name == "o_orderstatus", inferred.toString)
+      val (df, jobs) = jobsStartedBy(graft.etl.ParquetDir.read(spark, target))
+      assert(df.schema == inferred && jobs == 0, s"$mode: $jobs job(s)")
+    }
+    assert(r.load(src, LoadSpec("p_read", "append", partitionBy = part))
+      .count() == 2 * src.count())
+  }
+
+  test("committed read: Compaction.compact reads a partitioned input with " +
+      "the inferred schema and adds no Spark job to the rewrite") {
+    val base = java.nio.file.Files.createTempDirectory("compact_read").toString
+    val t = graft.ops.Tables(spark, sfDir)
+    t.orders.repartition(3).write.partitionBy("o_orderstatus")
+      .parquet(s"$base/in")
+    val inferred = spark.read.parquet(s"$base/in").schema
+    val (df, jobs) = jobsStartedBy(
+      graft.etl.ParquetDir.read(spark, s"$base/in"))
+    assert(df.schema == inferred && jobs == 0, s"$jobs job(s)")
+    val n = graft.etl.Compaction.targetFiles(spark, s"$base/in", 1L)._2
+    val (_, rewriteJobs) = jobsStartedBy(
+      spark.read.schema(inferred).parquet(s"$base/in").repartition(n)
+        .write.mode("overwrite").parquet(s"$base/alone"))
+    val (_, compactJobs) = jobsStartedBy(graft.etl.Compaction.compact(
+      spark, s"$base/in", s"$base/out", targetBytes = 1L))
+    assert(compactJobs == rewriteJobs,
+      s"compact started $compactJobs jobs, its rewrite alone $rewriteJobs")
+    assert(spark.read.parquet(s"$base/out").schema == inferred)
+    assert(spark.read.parquet(s"$base/out").count() == t.orders.count())
+  }
+
+  test("committed read: foreign parquet (no Spark schema in the footer) " +
+      "and a missing directory fall back to Spark's inferring read") {
+    import org.apache.parquet.example.data.simple.SimpleGroupFactory
+    import org.apache.parquet.hadoop.example.ExampleParquetWriter
+    import org.apache.parquet.schema.MessageTypeParser
+    val dir = java.nio.file.Files.createTempDirectory("foreign").toString
+    val schema = MessageTypeParser.parseMessageType(
+      "message m { required int64 id; optional binary name (UTF8); }")
+    val w = ExampleParquetWriter
+      .builder(new org.apache.hadoop.fs.Path(s"$dir/part-0.parquet"))
+      .withType(schema).withConf(spark.sparkContext.hadoopConfiguration)
+      .build()
+    try w.write(new SimpleGroupFactory(schema).newGroup()
+      .append("id", 7L).append("name", "x"))
+    finally w.close()
+    assert(graft.etl.ParquetDir.footerSchema(spark, dir).isEmpty)
+    val df = graft.etl.ParquetDir.read(spark, dir)
+    assert(df.schema == spark.read.parquet(dir).schema)
+    assert(df.collect().map(r => (r.getLong(0), r.getString(1))).toSeq ==
+      Seq((7L, "x")))
+    val missing = s"$dir/absent"
+    val e = intercept[org.apache.spark.sql.AnalysisException](
+      graft.etl.ParquetDir.read(spark, missing))
+    assert(e.getMessage.contains("absent"), e.getMessage)
+  }
+
   test("DataQuality: empty input passes every rule with zero (not NULL) violations") {
     val t = graft.ops.Tables(spark, sfDir)
     val out = graft.etl.DataQuality.evaluate(

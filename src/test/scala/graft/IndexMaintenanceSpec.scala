@@ -912,6 +912,33 @@ class IndexMaintenanceSpec extends SparkTestBase {
     graft.ops.SessionScratch.evictTransients()
   }
 
+  test("writeSidecar: republishing over a sidecar Hadoop wrote with its " +
+    ".crc replaces the body, drops the stale checksum, leaves no temp") {
+    val path = freshDir("sidecar_crc")
+    val name = "_probe_config"
+    val conf = spark.sparkContext.hadoopConfiguration
+    val p = new org.apache.hadoop.fs.Path(path, name)
+    val fs = p.getFileSystem(conf)
+    // the FileContext publish (the branch other schemes take) writes the
+    // sidecar through the checksummed local filesystem
+    IndexMaintenance.publishViaFileContext(fs,
+      new org.apache.hadoop.fs.Path(path, s".$name.tmp.first"), p,
+      "v=1;a long first body".getBytes("UTF-8"))
+    val crc = new java.io.File(path, s".$name.crc")
+    assert(crc.exists(), "the Hadoop publish must leave its .crc")
+    assert(IndexMaintenance.readSidecar(spark, path, name)
+      .contains("v=1;a long first body"))
+    IndexMaintenance.writeSidecar(spark, path, name, "v=2")
+    assert(IndexMaintenance.readSidecar(spark, path, name).contains("v=2"))
+    assert(!crc.exists(), "a stale .crc would fail the checksummed read")
+    val left = new java.io.File(path).listFiles().map(_.getName).sorted
+    assert(left.toSeq == Seq(name), left.mkString(", "))
+    // a publish into a directory that does not exist yet creates it
+    IndexMaintenance.writeSidecar(spark, s"$path/sub", name, "v=3")
+    assert(IndexMaintenance.readSidecar(spark, s"$path/sub", name)
+      .contains("v=3"))
+  }
+
   test("vacuum: refuses descriptively when committed files are LOST — " +
     "data loss is not garbage") {
     val path = freshDir("dedup_vac3")

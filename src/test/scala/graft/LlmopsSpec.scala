@@ -115,6 +115,13 @@ class LlmopsSpec extends SparkTestBase {
       assert(a.cell == b.cell)
       assert(a.centroid.sameElements(b.centroid))
     }
+    // seeds of differing length fail the fit, naming their lengths
+    import spark.implicits._
+    val ragged = Seq((1L, Seq(1.0f, 0.0f)), (2L, Seq(0.0f, 1.0f, 0.0f)))
+      .toDF("vec_id", "embedding")
+    val e = intercept[IllegalArgumentException](
+      KMeans.fit(spark, ragged, k = 2, iters = 1))
+    assert(e.getMessage.contains("lengths 2, 3"), e.getMessage)
   }
 
   test("connected components: transitive chains collapse, singletons stay") {

@@ -153,6 +153,72 @@ class MaintainedStoreSpec extends SparkTestBase {
     assert(cases.keySet == all.map(_.kind).toSet)
   }
 
+  /** The store root's parquet directories: immediate subdirectories
+    * holding at least one visible data file.
+    */
+  private def parquetDirs(path: String): Seq[String] = {
+    def visible(f: java.io.File) =
+      !f.getName.startsWith(".") && !f.getName.startsWith("_")
+    new java.io.File(path).listFiles().toSeq
+      .filter(d => d.isDirectory && visible(d) &&
+        d.listFiles().exists(f => f.isFile && visible(f)))
+      .map(_.getPath).sorted
+  }
+
+  /** The stores' lazy frame reads (the others collect on read). */
+  private val frameReads
+      : Map[String, (SparkSession, String) => org.apache.spark.sql.DataFrame] =
+    Map("dedup" -> DedupIndex.signatures, "bm25" -> TextIndex.postings,
+      "ngram" -> NgramIndex.lm, "ivf" -> IvfIndex.members,
+      "graph" -> GraphIndex.members)
+
+  MaintainedStore.all.foreach { st =>
+    test(s"committed read: ${st.kind} — every parquet dir reads with the " +
+      "inferred schema and no Spark job; so does the store's frame read") {
+      val c = cases(st.kind)
+      val p = freshDir(s"read_${st.kind}")
+      c.build(p)
+      c.append.foreach(_(p))
+      c.delete.foreach(_(p))
+      val dirs = parquetDirs(p)
+      assert(dirs.contains(st.dataDir(spark, p)), s"${st.kind}: $dirs")
+      if (c.delete.isDefined && st.kind != "ngram")
+        assert(dirs.exists(_.contains("/tombs-g")), s"${st.kind}: $dirs")
+      for (d <- dirs) {
+        val (df, jobs) = jobsStartedBy(graft.etl.ParquetDir.read(spark, d))
+        assert(df.schema == spark.read.parquet(d).schema, s"${st.kind} $d")
+        assert(jobs == 0, s"${st.kind} $d: $jobs job(s)")
+      }
+      frameReads.get(st.kind).foreach { read =>
+        val (df, jobs) = jobsStartedBy(read(spark, p))
+        assert(jobs == 0, s"${st.kind} frame read: $jobs job(s)")
+        assert(df.collect().nonEmpty, s"${st.kind} frame read is empty")
+      }
+    }
+  }
+
+  test("committed read: the graph store's member and edge files differ " +
+    "in nullability; the read schema still equals the inferred one") {
+    val p = freshDir("read_graph_mixed")
+    // a non-nullable id: member files record member_id NOT NULL, the
+    // edge files' NULL literal records it nullable
+    GraphIndex.build(spark.read.parquet(s"$sfDir/embeddings.parquet")
+      .select(coalesce(col("vec_id"), lit(0L)).as("vec_id"),
+        col("embedding")), p, k = 4)
+    val dir = GraphIndex.dataDir(spark, p)
+    val footers = new java.io.File(dir).listFiles().toSeq
+      .filter(f => f.isFile && f.getName.endsWith(".parquet"))
+      .flatMap(f => graft.etl.ParquetDir.footerSchema(spark, f.getPath))
+      .distinct
+    assert(footers.size > 1, s"expected differing file schemas: $footers")
+    // catalogString omits nullability
+    assert(footers.map(_.catalogString).distinct.size == 1,
+      s"files differ beyond nullability: $footers")
+    val inferred = spark.read.parquet(dir).schema
+    assert(graft.etl.ParquetDir.read(spark, dir).schema == inferred)
+    assert(inferred.forall(_.nullable))
+  }
+
   MaintainedStore.all.foreach { st =>
     test(s"crash matrix: ${st.kind} — data write, manifest publish, " +
       "stats write, mid-compaction, mid-republish") {
