@@ -3,6 +3,7 @@ package graft
 import java.util.concurrent.{LinkedBlockingQueue, TimeUnit}
 import java.util.concurrent.atomic.{AtomicInteger, AtomicLong}
 
+import org.apache.spark.metrics.source.CodegenMetrics
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd, SparkListenerJobStart, SparkListenerStageCompleted}
 import org.apache.spark.sql.execution.QueryExecution
 import org.apache.spark.sql.util.QueryExecutionListener
@@ -23,7 +24,14 @@ import org.apache.spark.sql.util.QueryExecutionListener
   *                 is a different, never-executed QueryExecution;
   *  - `jobs/jobWall/taskSum` — Spark job count, summed job wall-clock,
   *                 and summed executor task time across ALL jobs the rep
-  *                 triggered (including jobs from eager checkpoints).
+  *                 triggered (including jobs from eager checkpoints);
+  *  - `compiles` — Janino compilations of generated code during the rep
+  *                 (driver and tasks: one JVM in local mode). A warm rep
+  *                 that still compiles is missing Spark's codegen cache
+  *                 (see [[GraftSession.CodegenCacheEntries]]).
+  *
+  * After the last rep it prints the JVM's peak resident set
+  * (`peak_rss_mb`, VmHWM).
   *
   * wall − jobWall − (anal+opt+plan) ≈ codegen + scheduling + driver glue,
   * the residual that neither more cores nor less data shrinks.
@@ -67,6 +75,7 @@ object ProfileQ {
     names.foreach { n =>
       (1 to 3).foreach { rep =>
         jobs.set(0); jobWall.set(0L); taskSum.set(0L)
+        val compiles0 = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
         val t0 = System.nanoTime()
         val df = byName(n).run(spark, sfDir)
         val tBuild = System.nanoTime()
@@ -91,10 +100,18 @@ object ProfileQ {
           f"anal=${ph("analysis")}%.3f opt=${ph("optimization")}%.3f " +
           f"plan=${ph("planning")}%.3f jobs=${jobs.get} " +
           f"jobWall=${jobWall.get / 1e3}%.2f " +
-          f"taskSum=${taskSum.get / 1e3}%.2f rows=$c")
+          f"taskSum=${taskSum.get / 1e3}%.2f " +
+          s"compiles=${CodegenMetrics.METRIC_COMPILATION_TIME.getCount -
+            compiles0} rows=$c")
         ops.SessionScratch.evictTransients()
       }
     }
+    // the JVM's peak resident set (VmHWM), e.g. to price a cache size
+    val hwm = scala.util.Using(
+        scala.io.Source.fromFile("/proc/self/status"))(
+        _.getLines().find(_.startsWith("VmHWM:"))).toOption.flatten
+    hwm.foreach(l =>
+      println(s"[profq] peak_rss_mb=${l.split("\\s+")(1).toLong / 1024}"))
     spark.stop()
   }
 }

@@ -122,10 +122,12 @@ object MetadataExtractor {
     val present = tables.filter { n =>
       new java.io.File(s"$dir/$n.parquet").exists()
     }
+    // the session's memoized relations: no schema-inference job per table
+    val rels = graft.ops.Tables(spark, dir)
     val tableModels = present.map { name =>
       val schema =
-        if (name == "events") graft.ops.Tables(spark, dir).events.schema
-        else spark.read.parquet(s"$dir/$name.parquet").schema
+        if (name == "events") rels.events.schema
+        else rels.table(name).schema
       TableModel(name, s"fixture table $name", schema.fields.toSeq.map { f =>
         ColumnModel(
           name = f.name,

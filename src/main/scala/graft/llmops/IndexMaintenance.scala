@@ -1,6 +1,6 @@
 package graft.llmops
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Observation, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.etl.ParquetDir
@@ -124,6 +124,45 @@ object IndexMaintenance {
       try Some(scala.io.Source.fromInputStream(in, "UTF-8").mkString)
       finally in.close()
     }
+  }
+
+  // ---- numbers a commit records, taken inside its own query --------------
+  //
+  // A commit's derived numbers (BM25 corpus stats, append and delete
+  // counts) are observed ([[org.apache.spark.sql.Dataset.observe]]) in
+  // the RESULT stage of the one query that writes or pins the rows, never
+  // by a second pass over them. Result stage only: Spark applies a result
+  // task's accumulator update once per partition, but a shuffle-map
+  // task's again whenever its stage re-runs (speculation, fetch-failure
+  // retry), so a metric below an exchange can over-count.
+
+  /** The listener that completes an [[Observation]] runs on Spark's
+    * asynchronous bus; a query that never carried the observation would
+    * otherwise wait forever.
+    */
+  private val ObservedWait = scala.concurrent.duration.Duration(5, "min")
+
+  /** Run `body` — the one query `obs` is attached to — and return its
+    * result with the Long metrics `names` (aggregates that are never
+    * NULL). A metric the optimizer removed along with a provably empty
+    * subtree reads as 0.
+    */
+  private[llmops] def observed[T](obs: Observation, names: String*)(
+      body: => T): (T, Seq[Long]) = {
+    val out = body
+    val row = scala.concurrent.Await.result(obs.future, ObservedWait)
+    (out, names.map(n =>
+      if (row.length == 0) 0L else row.getAs[Long](n)))
+  }
+
+  /** Write `rows` into `dir` under `mode` and return how many rows were
+    * written, counted in the write's own result stage.
+    */
+  private[llmops] def writeCounted(rows: DataFrame, mode: String,
+      dir: String): Long = {
+    val obs = Observation()
+    observed(obs, "n")(rows.observe(obs, count(lit(1)).as("n"))
+      .write.mode(mode).parquet(dir))._2.head
   }
 
 
@@ -352,11 +391,33 @@ object IndexMaintenance {
     */
   private[llmops] def addTombstones(s: SparkSession, path: String,
       manifestName: String, what: String, ids: DataFrame): Unit = {
+    val (cur, committed) = openTombstones(s, path, manifestName, what)
+    val distinctIds = ids.toDF("id").select(col("id").cast("long"))
+      .distinct()
+    val newIds =
+      if (committed) {
+        val existing = ParquetDir.read(s, cur).select(col("id").as("__tomb_id"))
+        distinctIds.join(existing,
+          distinctIds("id") === existing("__tomb_id"), "left_anti")
+      } else distinctIds
+    // localCheckpoint: the count below and the write must see ONE
+    // snapshot (the anti-join reads the store being appended to)
+    val pinned = newIds.localCheckpoint()
+    commitTombstones(s, path, manifestName, cur, pinned, pinned.count())
+    SessionScratch.releaseCheckpoint(pinned)
+  }
+
+  /** Open the tombstone store for a delete: refuse a read-only store,
+    * then return the directory the delete appends to and whether a
+    * delete was ever committed (only then can ids already be
+    * tombstoned).
+    */
+  private[llmops] def openTombstones(s: SparkSession, path: String,
+      manifestName: String, what: String): (String, Boolean) = {
     requireMutable(s, path, "delete")
     val tn = tombManifest(manifestName)
-    val committed = readSidecar(s, path, tn)
-    val cur = committed match {
-      case Some(_) => verifiedDir(s, path, tn, s"$what tombstones")
+    readSidecar(s, path, tn) match {
+      case Some(_) => (verifiedDir(s, path, tn, s"$what tombstones"), true)
       case None =>
         // no tombstone manifest = no delete ever COMMITTED. Any
         // existing tombs-g* directory is provably-uncommitted garbage
@@ -367,34 +428,30 @@ object IndexMaintenance {
         // never ran, with a fingerprint stamp that would then
         // VALIDATE the mismatch). Sweep it before starting fresh.
         dropTombDirs(s, path, "could not sweep orphaned tombstone dir")
-        s"$path/tombs-g0"
+        (s"$path/tombs-g0", false)
     }
-    val distinctIds = ids.toDF("id").select(col("id").cast("long"))
-      .distinct()
-    val newIds = committed match {
-      case Some(_) =>
-        val existing = ParquetDir.read(s, cur).select(col("id").as("__tomb_id"))
-        distinctIds.join(existing,
-          distinctIds("id") === existing("__tomb_id"), "left_anti")
-      case None => distinctIds
-    }
-    // localCheckpoint: the count below and the write must see ONE
-    // snapshot (the anti-join reads the store being appended to)
-    val pinned = newIds.localCheckpoint()
-    val nNew = pinned.count()
+  }
+
+  /** THE tombstone commit: append `newIds` — one int64 `id` column,
+    * distinct, none already tombstoned, `nNew` rows, pinned so the count
+    * and the write see one snapshot — into `cur` (from
+    * [[openTombstones]]) and publish the tombstone manifest.
+    */
+  private[llmops] def commitTombstones(s: SparkSession, path: String,
+      manifestName: String, cur: String, newIds: DataFrame,
+      nNew: Long): Unit =
     if (nNew > 0) {
       // bump BEFORE the tombstone publish (the bumpAppended crash
       // direction: a crash between the two over-counts, erring early)
       bumpDeleted(s, path, nNew)
-      pinned.write.mode("append").parquet(cur)
-      publishManifest(s, path, tn, cur.substring(path.length + 1))
+      newIds.write.mode("append").parquet(cur)
+      publishManifest(s, path, tombManifest(manifestName),
+        cur.substring(path.length + 1))
     }
     // nNew == 0 (every id already tombstoned, or an empty delete) is a
     // SEMANTIC no-op — committing it anyway would cost a sidecar RMW,
     // an empty part file in tombs-gN, and a manifest republish per
     // repeated takedown replay, all for state the store already holds
-    SessionScratch.releaseCheckpoint(pinned)
-  }
 
   /** The committed tombstone set as a one-column frame (`id`), or
     * None when no delete was ever recorded (the common case — reads
@@ -1003,13 +1060,21 @@ object TextIndex extends MaintainedStore("bm25", "text_index", "postings",
 
   /** Postings of a documents frame: one row per (doc, term) with the
     * term frequency and the doc length — the single tokenize pass a
-    * doc pays on ingest.
+    * doc pays on ingest. Documents are hash-partitioned by `doc_id`
+    * BEFORE tokenizing, so the one exchange carries each document once
+    * and the (doc_id, dl, w) aggregate needs no second one. `docStats`
+    * observes the corpus stats `n_docs` and `sum_dl` on the
+    * per-document projection, which sits after that exchange: in the
+    * result stage of the query that runs the postings.
     */
-  private[graft] def postingsOf(docs: DataFrame): DataFrame =
-    docs
+  private[graft] def postingsOf(docs: DataFrame,
+      docStats: Observation): DataFrame =
+    docs.select(col("doc_id"), col("text"))
+      .repartition(col("doc_id"))
       // dl before the explode: beside it, Spark re-evaluates it per token
       .select(col("doc_id"), col("text"),
         TextStats.nWords(col("text")).cast("long").as("dl"))
+      .observe(docStats, corpusStats.head, corpusStats.tail: _*)
       .select(col("doc_id"), col("dl"),
         explode(PortableHash.tokens(col("text"))).as("w"))
       .filter(col("w") =!= "")
@@ -1017,11 +1082,22 @@ object TextIndex extends MaintainedStore("bm25", "text_index", "postings",
       .agg(count(lit(1)).as("tf"))
       .select(col("doc_id"), col("w"), col("tf"), col("dl"))
 
-  /** (n_docs, sum_dl) of a documents frame — exact integers. */
-  private def statsOf(docs: DataFrame): (Long, Long) = {
-    val r = docs.agg(count(lit(1)),
-      sum(TextStats.nWords(col("text")).cast("long"))).head()
-    (r.getLong(0), if (r.isNullAt(1)) 0L else r.getLong(1))
+  /** (n_docs, sum_dl) over per-document rows with a `dl` column — exact
+    * integers, never NULL.
+    */
+  private val corpusStats: Seq[org.apache.spark.sql.Column] = Seq(
+    count(lit(1)).as("n_docs"),
+    coalesce(sum(col("dl")), lit(0L)).as("sum_dl"))
+
+  /** Write the postings of `docs` into `dir` under `mode` — one query —
+    * and return the docs' (n_docs, sum_dl).
+    */
+  private def writePostings(docs: DataFrame, dir: String,
+      mode: String): (Long, Long) = {
+    val docStats = Observation()
+    val Seq(n, dl) = IndexMaintenance.observed(docStats, "n_docs", "sum_dl")(
+      postingsOf(docs, docStats).write.mode(mode).parquet(dir))._2
+    (n, dl)
   }
 
   private def writeStats(s: SparkSession, path: String,
@@ -1090,24 +1166,29 @@ object TextIndex extends MaintainedStore("bm25", "text_index", "postings",
     val s = docIds.sparkSession
     val ids = docIds.toDF("id").select(col("id").cast("long"))
     // effective set: present in the (already-masked, config-verified)
-    // postings — CHECKPOINTED so the stats rollup and the tombstone
-    // write share one postings scan instead of re-running the lineage
-    // twice (the dedupIngest discipline). Caveat shared with
+    // postings, one row per doc — CHECKPOINTED so the tombstone write
+    // reuses its postings scan, and its (count, sum(dl)) observed by
+    // the checkpoint's own query. Masked and distinct, it is exactly
+    // the NEW tombstone set, committed as is. Caveat shared with
     // [[repairStats]]: a doc whose text trims to ZERO tokens has no
     // posting rows, so it can neither be tombstoned nor decrement
     // n_docs here — it also can never match a term, but idf's N keeps
     // counting it until a rebuild; takedown feeds for such docs are a
     // corpus-side concern.
-    val eff = SessionScratch.transientCheckpoint(
-      postings(s, path)
-        .join(ids, col("doc_id") === col("id"), "left_semi")
-        .groupBy(col("doc_id")).agg(max(col("dl")).as("dl")))
-    val r = eff.agg(count(lit(1)), sum(col("dl"))).head()
-    val (nDel, dlDel) =
-      (r.getLong(0), if (r.isNullAt(1)) 0L else r.getLong(1))
+    val gone = Observation()
+    val (eff, Seq(nDel, dlDel)) =
+      IndexMaintenance.observed(gone, "n_docs", "sum_dl")(
+        SessionScratch.transientCheckpoint(
+          postings(s, path)
+            .join(ids, col("doc_id") === col("id"), "left_semi")
+            .groupBy(col("doc_id")).agg(max(col("dl")).as("dl"))
+            .observe(gone, corpusStats.head, corpusStats.tail: _*)))
     if (nDel > 0) {
       val (n0, dl0) = stats(s, path)
-      tombstoneDelete(eff.select(col("doc_id")), path)
+      val (cur, _) =
+        IndexMaintenance.openTombstones(s, path, manifestName, what)
+      IndexMaintenance.commitTombstones(s, path, manifestName, cur,
+        eff.select(col("doc_id").cast("long").as("id")), nDel)
       writeStats(s, path, n0 - nDel, dl0 - dlDel,
         IndexMaintenance.tombFingerprint(s, path, manifestName))
     }
@@ -1119,8 +1200,7 @@ object TextIndex extends MaintainedStore("bm25", "text_index", "postings",
   def build(docs: DataFrame, path: String): Unit = {
     val s = docs.sparkSession
     buildCommit(s, path) { dir =>
-      postingsOf(docs).write.mode("overwrite").parquet(dir)
-      val (n, dl) = statsOf(docs)
+      val (n, dl) = writePostings(docs, dir, "overwrite")
       writeStats(s, path, n, dl)
     }
     IndexMaintenance.writeSidecar(s, path, configName, Config)
@@ -1144,8 +1224,7 @@ object TextIndex extends MaintainedStore("bm25", "text_index", "postings",
     val s = newDocs.sparkSession
     appendCommit(s, path, "postings append") { cur =>
       val (n0, dl0) = stats(s, path)
-      postingsOf(newDocs).write.mode("append").parquet(cur)
-      val (n1, dl1) = statsOf(newDocs)
+      val (n1, dl1) = writePostings(newDocs, cur, "append")
       writeStats(s, path, n0 + n1, dl0 + dl1)
     }
   }
@@ -1512,14 +1591,11 @@ object IvfIndex extends MaintainedStore("ivf", "ivf_index", "assignments",
   def append(newVecs: DataFrame, path: String): Unit = {
     val s = newVecs.sparkSession
     appendCommit(s, path, "vector append") { cur =>
-      // checkpointed so the provenance count and the write share ONE
-      // evaluation of the delta's upstream lineage
-      val assigned = SessionScratch.transientCheckpoint(
+      // the provenance count is taken by the write itself
+      val nDelta = IndexMaintenance.writeCounted(
         KMeans.assign(newVecs, centroids(s, path))
           .select(col("vec_id").as("member_id"), col("cell"),
-            col("embedding").as("em")))
-      val nDelta = assigned.count()
-      assigned.write.mode("append").parquet(cur)
+            col("embedding").as("em")), "append", cur)
       // provenance BEFORE the manifest publish — see [[IndexMaintenance
       // .bumpAppended]]'s crash-direction contract
       IndexMaintenance.bumpAppended(s, path, nDelta)
@@ -1831,9 +1907,10 @@ object GraphIndex extends MaintainedStore("graph", "graph_index", "graph",
         allFwd.union(allFwd
             .select(col("dst").as("src"), col("src").as("dst")))
           .distinct())
-      memberShape(newM).write.mode("append").parquet(cur)
+      val nDelta =
+        IndexMaintenance.writeCounted(memberShape(newM), "append", cur)
       edgeShape(edges).write.mode("append").parquet(cur)
-      IndexMaintenance.bumpAppended(s, path, newM.count())
+      IndexMaintenance.bumpAppended(s, path, nDelta)
     }
   }
 
@@ -2100,11 +2177,11 @@ object IvfPqIndex extends MaintainedStore("ivfpq", "ivfpq_index", "codes",
   def append(newVecs: DataFrame, path: String): Unit = {
     val s = newVecs.sparkSession
     appendCommit(s, path, "vector append") { cur =>
-      val encoded = SessionScratch.transientCheckpoint(
-        encodeUnder(newVecs, centroids(s, path), codebookRows(s, path)))
-      // one encoded row per (vector, subspace): members = rows / m
-      val nDelta = encoded.count() / M
-      encoded.write.mode("append").parquet(cur)
+      // one encoded row per (vector, subspace): members = rows / m,
+      // counted by the write itself
+      val nDelta = IndexMaintenance.writeCounted(
+        encodeUnder(newVecs, centroids(s, path), codebookRows(s, path)),
+        "append", cur) / M
       IndexMaintenance.bumpAppended(s, path, nDelta)
     }
   }

@@ -24,5 +24,6 @@ class GraftSessionSpec extends SparkTestBase {
     assert(conf.get("spark.sql.session.timeZone") == "UTC")
     assert(conf.get("spark.sql.adaptive.enabled") == "true")
     assert(conf.get("spark.ui.enabled") == "false")
+    assert(conf.get("spark.sql.codegen.cache.maxEntries") == "1000")
   }
 }

@@ -263,7 +263,8 @@ class IndexMaintenanceSpec extends SparkTestBase {
       t.split(" ", -1).filter(_.nonEmpty).groupBy(identity).toSeq
         .map { case (w, ws) => (id, w, ws.length.toLong, dl) }
     }.flatten.sorted.toSeq
-    val got = TextIndex.postingsOf(postingsCorpus).collect()
+    val got = TextIndex.postingsOf(postingsCorpus,
+        org.apache.spark.sql.Observation()).collect()
       .map(r => (r.getLong(0), r.getString(1), r.getLong(2), r.getLong(3)))
       .sorted.toSeq
     assert(got == want)
@@ -283,7 +284,8 @@ class IndexMaintenanceSpec extends SparkTestBase {
     import org.apache.spark.sql.catalyst.expressions.RegExpReplace
     import org.apache.spark.sql.catalyst.plans.logical.{Generate,
       LogicalPlan, Project}
-    val plan = graft.llmops.TextIndex.postingsOf(postingsCorpus)
+    val plan = graft.llmops.TextIndex.postingsOf(postingsCorpus,
+        org.apache.spark.sql.Observation())
       .queryExecution.optimizedPlan
     val gens = plan.collect { case g: Generate => g }
     assert(gens.size == 1, s"one explode expected:\n$plan")
